@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query wall seconds.
@@ -48,10 +50,12 @@ object Bench {
   /** The memoized-chain queries timed COLD (caches dropped before each):
     * the memoized dedup/graph/index chains push shared build cost into
     * warmup, so these queries' warm numbers hide a build the cold section
-    * reports separately. DERIVABLE, not just curated: [[ColdDetect]]
-    * recomputes the chain map empirically (invalidate-all → run → which
-    * chains repopulated?) and fails on a stale entry or an unrepresented
-    * chain, so the list can't silently rot as operators are added.
+    * reports separately. A chain is a [[Memo]] whose value holds a
+    * DataFrame ([[Memo.labels]]); a memoized count is not one. DERIVABLE,
+    * not just curated: [[ColdDetect]] recomputes the chain map
+    * empirically (Memo.invalidate → run → which labels repopulated?) and
+    * fails on a stale entry or an unrepresented chain, so the list can't
+    * silently rot as operators are added.
     * Queries that touch only an already-represented chain are
     * deliberately NOT listed (each cold sample re-pays the full rebuild;
     * 50+ rebuilds would blow the bench budget for no new information).
@@ -60,8 +64,9 @@ object Bench {
     * iterative graph fixpoints (q84/87/88/98/101/112/125/131/220/155/
     * 168/132), rule mining (q102), co-occurrence mine (q115), BPE
     * merge-table fit + segmentation replay (q129/130), span/winnow/
-    * standing-index builds (q231/237/242/245), memoized corpus stats
-    * (q69), corpus-mix plan-build count (q63). */
+    * standing-index builds (q231/237/242/245), corpus-mix plan-build
+    * frame (q63). q69 is not listed: its only memo is the corpus-stats
+    * count pair, not a chain. */
   val coldNames: Seq[String] = Seq(
     "q34_dedup_ngram_jaccard", "q35_dedup_minhash_lsh",
     "q47_dedup_clusters", "q49_dedup_keep_best", "q54_passage_overlap",
@@ -74,7 +79,7 @@ object Bench {
     "q168_shortest_path", "q132_link_predict", "q129_bpe_fit",
     "q130_bpe_encode", "q231_repeated_spans", "q237_decontam_spans",
     "q242_winnow_fingerprints", "q245_incremental_minhash",
-    "q69_bm25_topk", "q63_mix_sources")
+    "q63_mix_sources")
     .filter(SparkEntry.queries.contains)
 
   /** Deny exactly one known-benign message on one logger, leaving every
@@ -263,7 +268,9 @@ object Bench {
       val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(results, f3)},"cold":${jmap(cold, f3)},"cold_max":${jmap(coldMax, f3)},"pass_totals":$passTotals,"cold_pass_totals":$coldPassTotals,"pass_spread":$passSpread,"calibration_s":$calib,"load_avg":$loadsJ,"contended":$contended,"sched":$sched,"failed":$failedJson$part,"sf":"$sfDir"}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detail + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write $detailPath: " +
+          e.toString.linesIterator.next()) }
       // The driver captures only the LAST 2000 chars of stdout and parses
       // the last complete JSON line out of that tail — rounds 6/7
       // overflowed it (parsed: null) once the query map passed ~100
@@ -321,12 +328,14 @@ object Bench {
             def run(): Unit = if (remaining > 0.45 * budgetS) {
               try SparkEntry.queries(n)(spark, sfDir)
                 .groupBy().count().queryExecution.executedPlan.execute()
-              catch { case _: Throwable => () }
+              catch { case NonFatal(e) =>
+                System.err.println(s"[bench] warmup touch of $n failed: " +
+                  e.toString.linesIterator.next()) }
               touched.incrementAndGet()
             }
           })
         }
-        tasks.foreach(t => try t.get() catch { case _: Throwable => () })
+        tasks.foreach(_.get())
       } finally {
         pool.shutdown()
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -422,7 +431,7 @@ object Bench {
       for (name <- coldNames if !cut) {
         if (remaining <= 0) cut = true
         else {
-          graft.operators.Text.invalidateCaches(spark, sfDir)
+          Memo.invalidate(spark, sfDir)
           val q0 = System.nanoTime()
           try SparkEntry.queries(name)(spark, sfDir).count()
           catch { case _: Throwable => failed += name }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Pin [[Bench.coldNames]] against reality instead of trusting the hand
-  * list: for every registered query, drop every memoized chain
-  * ([[graft.operators.Text.invalidateCaches]]), run the query once, and
-  * record which chains repopulated ([[graft.operators.Text
-  * .cacheLabels]]). A query that rebuilds a chain when the caches are
-  * gone is a query whose cold timing differs from its warm timing — the
-  * criterion the bench's cold section exists for.
+  * list: for every registered query, drop every memo of the dir
+  * ([[Memo.invalidate]]), run the query once, and record which chains
+  * repopulated ([[Memo.labels]], the registry: a chain is a memo whose
+  * value holds a DataFrame). A query that rebuilds a chain when the memos
+  * are gone is a query whose cold timing differs from its warm timing —
+  * the criterion the bench's cold section exists for.
   *
   * The enforced contract (exits non-zero on violation, so the list
   * cannot silently rot as operators are added — the round-15 advice):
@@ -45,12 +45,12 @@ object ColdDetect {
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val touched: Map[String, Set[String]] = names.map { n =>
-      graft.operators.Text.invalidateCaches(spark, sfDir)
+      Memo.invalidate(spark, sfDir)
       try SparkEntry.queries(n)(spark, sfDir).count()
       catch { case e: Throwable =>
         System.err.println(s"[colddetect] $n FAILED: ${e.getMessage}")
       }
-      n -> graft.operators.Text.cacheLabels(spark, sfDir)
+      n -> Memo.labels(spark, sfDir)
     }.toMap
     spark.stop()
     val curated = Bench.coldNames

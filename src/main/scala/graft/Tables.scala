@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -25,35 +26,19 @@ object Tables {
   /** Path of a table inside a scale-factor directory. */
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Session identity for metadata memos: the session UUID where exposed
-    * (the classic runtime — always, here), identity hash otherwise. A
-    * STRING key never pins the session object (ADVICE r17: the old
-    * session-keyed TrieMap strongly held every session for the JVM
-    * lifetime). */
-  private val uuidMethod: Option[java.lang.reflect.Method] =
-    scala.util.Try(Class
-      .forName("org.apache.spark.sql.classic.SparkSession")
-      .getMethod("sessionUUID")).toOption // private[sql] in Scala, public in bytecode
-  private def sid(s: SparkSession): String =
-    uuidMethod.flatMap(m => scala.util.Try(m.invoke(s).toString).toOption)
-      .getOrElse("idhash:" + System.identityHashCode(s))
-
-  /** Memoized parquet SCHEMA per (session, path) — the catalog's schema
-    * registry, reference parity with IndexR's schema JSON on ZooKeeper
-    * (ZkTableManager). A bare `spark.read.parquet` re-infers the schema
-    * (footer read + resolution) on EVERY call, and the engine builds
-    * table frames hundreds of times per bench pass; passing the known
-    * schema skips that repeated driver-side work. Keyed on the session
-    * UUID so a config that changes inference (nanosAsLong) cannot leak
-    * across sessions; this caches metadata only, never rows or results.
-    * A table directory rewritten mid-session must go through
-    * [[invalidateMeta]] (the Text.invalidateCaches discipline). */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.types.StructType]
-
+  /** A table's frame, read with its memoized parquet SCHEMA — the
+    * catalog's schema registry, reference parity with IndexR's schema JSON
+    * on ZooKeeper (ZkTableManager). A bare `spark.read.parquet` re-infers
+    * the schema (footer read + resolution) on EVERY call, and the engine
+    * builds table frames hundreds of times per bench pass; passing the
+    * known schema skips that repeated driver-side work. The memo is per
+    * session so a config that changes inference (nanosAsLong) cannot leak
+    * across sessions; it holds metadata only, never rows or results. A
+    * table directory rewritten mid-session must go through
+    * [[Memo.invalidate]]. */
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
-    val sch = schemaCache.getOrElseUpdate((sid(spark), p),
+    val sch = Memo.get(spark, dir, "tables.schema." + name)(
       spark.read.parquet(p).schema)
     spark.read.schema(sch).parquet(p)
   }
@@ -61,27 +46,23 @@ object Tables {
   /** Memoized view registration per (session, view name): re-running
     * `createOrReplaceTempView` with the identical frame on every query
     * build is catalog-metadata churn the SQL-surface queries paid per
-    * call. The memo records WHAT was registered (dir + tag); a different
-    * dir or tag under the same name re-registers, identical registration
-    * is a no-op. Metadata only — a view holds an unexecuted plan. */
+    * call. The record holds WHAT was registered (dir + tag); a different
+    * dir or tag under the same name re-registers, and so does a view
+    * dropped from the catalog since; otherwise registration is a no-op.
+    * This is a record of catalog state, not a [[Memo]]: one name can
+    * re-point to another dir. Metadata only — a view holds an unexecuted
+    * plan. */
   private val viewReg = scala.collection.concurrent.TrieMap
     .empty[(String, String), (String, String)]
 
   def registerViewOnce(spark: SparkSession, dir: String, name: String,
-      tag: String = "")(frame: => DataFrame): Unit =
-    if (!viewReg.get((sid(spark), name)).contains((dir, tag))) {
+      tag: String = "")(frame: => DataFrame): Unit = {
+    val k = (Bridge.sessionId(spark), name)
+    if (!viewReg.get(k).contains((dir, tag)) ||
+        !spark.catalog.tableExists(name)) {
       frame.createOrReplaceTempView(name)
-      viewReg((sid(spark), name)) = (dir, tag)
+      viewReg(k) = (dir, tag)
     }
-
-  /** Drop the memoized schemas and view registrations touching `dir` —
-    * for a table directory rewritten mid-session. */
-  def invalidateMeta(spark: SparkSession, dir: String): Unit = {
-    val s = sid(spark)
-    schemaCache.keys.filter(k => k._1 == s && k._2.startsWith(dir))
-      .foreach(schemaCache.remove)
-    viewReg.filter { case (k, v) => k._1 == s && v._1 == dir }
-      .keys.foreach(viewReg.remove)
   }
 
   /** Register every table as a temp view so `spark.sql` works over the dir. */

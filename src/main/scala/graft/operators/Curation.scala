@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Ops._
 
 /** Corpus-curation operators for training-data pipelines: cross-document
@@ -157,22 +157,9 @@ object Curation {
 
   // corpus size per (session, dir), memoized so repeated q58 builds don't
   // re-scan just to count
-  private val nDocsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  /** Drop the memoized corpus count + mix thresholds for (session, dir) —
-    * chained from Text.invalidateCaches after re-ingesting documents. */
-  private[operators] def invalidateCaches(s: SparkSession, d: String): Unit = {
-    nDocsCache.remove((s, d))
-    mixCache.remove((s, d))
-  }
-  // nDocsCache excluded: a Long recount is not a chain build (Text
-  // .cacheLabels doc)
-  private[operators] def cacheLabels(s: SparkSession, d: String): Set[String] =
-    if (mixCache.contains((s, d))) Set("curation.mix") else Set.empty
   private def q58(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val n = nDocsCache.getOrElseUpdate((s, d), Tables.documents(s, d).count())
+    val n = Memo.get(s, d, "curation.nDocs")(Tables.documents(s, d).count())
     tfidfTopK(Tables.documents(s, d), "doc_id", "text", k = 5, nDocsHint = Some(n))
       .orderBy($"doc_id", $"rank")
   }
@@ -374,11 +361,9 @@ object Curation {
     "en" -> 0.5, "de" -> 0.2, "es" -> 0.15, "fr" -> 0.1, "zh" -> 0.05)
   // mixCorpus runs one per-class count job at plan-build; memoize the built
   // frame per (session, dir) so repeated builds don't re-count (q58 pattern)
-  private val mixCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def q63(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    mixCache.getOrElseUpdate((s, d),
+    Memo.get(s, d, "curation.mix")(
       mixCorpus(Tables.documents(s, d), "doc_id", "text", "lang", mixTargets.toMap))
       .groupBy($"cls")
       .agg(count(lit(1)).as("total"), sum($"keep").as("kept"))
@@ -1959,51 +1944,23 @@ object Curation {
   // manifests, then the drift table is read from metadata alone. The
   // oracle recomputes the per-bucket counts from the raw table, so the
   // gate proves the manifests carry exactly the truth the data holds.
-  private val segSnapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  // leak guards for the memoized fixture: the temp roots are deleted by ONE
-  // JVM shutdown hook (registered lazily on first use), and a session's
-  // cache entries are evicted when its SparkContext ends — a long-lived
-  // multi-session process neither accumulates fixture dirs on disk nor
-  // pins stopped sessions through the cache key
-  private val segSnapRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  private lazy val segSnapHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      segSnapRoots.forEach { root =>
-        try {
-          val walk = java.nio.file.Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach { p =>
-              try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: Throwable => () }
-            }
-          finally walk.close()
-        } catch { case _: Throwable => () }
-      }))
+  // The snapshots are a Memo fixture: Memo deletes the temp dir on
+  // invalidate, at context end and at JVM exit.
   private def q268(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (oldDir, newDir) = segSnapCache.getOrElseUpdate((s, d), {
-      segSnapHook
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_segdrift_")
-      segSnapRoots.add(rootPath)
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          segSnapCache.filterInPlace((k, _) => k._1 ne s)
-      })
-      val root = rootPath.toString
+    val root = Memo.get(s, d, "curation.segSnap") {
+      val t = Memo.tempDir("graft_segdrift_")
       val docs = Tables.documents(s, d)
         .select($"doc_id", ($"doc_id" % 8).as("seg"))
-      val o = s"$root/old"
-      val n = s"$root/new"
-      docs.write.partitionBy("seg").parquet(o)
-      docs.filter($"doc_id" % 7 =!= 0).write.partitionBy("seg").parquet(n)
-      graft.storage.Segments.buildManifest(s, o, Nil)
-      graft.storage.Segments.buildManifest(s, n, Nil)
-      (o, n)
-    })
-    manifestCountDrift(s, oldDir, newDir).orderBy($"segment")
+      docs.write.partitionBy("seg").parquet(t.resolve("old"))
+      docs.filter($"doc_id" % 7 =!= 0).write.partitionBy("seg")
+        .parquet(t.resolve("new"))
+      graft.storage.Segments.buildManifest(s, t.resolve("old"), Nil)
+      graft.storage.Segments.buildManifest(s, t.resolve("new"), Nil)
+      t
+    }
+    manifestCountDrift(s, root.resolve("old"), root.resolve("new"))
+      .orderBy($"segment")
   }
   private val q268Sql =
     """WITH o AS (SELECT doc_id % 8 AS b, COUNT(*) AS old_rows

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Ops._
 
 /** Batch expressions of the reference's ingestion/streaming operators
@@ -1414,15 +1414,14 @@ object Events {
       |FROM r2 CROSS JOIN chi""".stripMargin
 
   // q170 — rollup-mode serving end-to-end (reference rollup parity): the
-  // ingest-side rollup segments are built once (memoized per dir), the
+  // ingest-side rollup segments are built once (a Memo fixture per
+  // (session, dir), deleted on invalidate and at context end), the
   // raw events path is registered, the RollupServingRule is installed,
   // and the query below — written against the RAW table — is served from
   // the rollup. The oracle aggregates the raw table in DuckDB, so the
   // driver's gate proves the rewrite is answer-identical; the plan-level
   // lock (the scan really moves to the rollup, non-derivable shapes
   // don't) is RollupServingSpec.
-  private val rollupDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def q170(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val rawPath = graft.Tables.path(d, "events")
@@ -1430,13 +1429,12 @@ object Events {
       Seq("event_type", "user_id"),
       Seq(("value", graft.streaming.Realtime.Sum),
         ("event_id", graft.streaming.Realtime.Cnt)), arrival = "event_id")
-    val rollupPath = rollupDirCache.getOrElseUpdate((s, d), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rollup_")
-        .toString + "/events_rollup"
+    val rollupPath = Memo.get(s, d, "events.rollupDir") {
+      val t = Memo.tempDir("graft_rollup_")
       graft.streaming.Realtime.rollupBatch(s.read.parquet(rawPath), spec)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(t.resolve("events_rollup"))
+      t
+    }.resolve("events_rollup")
     graft.plans.RollupServing.registerFromSpec(rawPath, rollupPath, spec)
     if (!s.experimental.extraOptimizations
         .exists(_.isInstanceOf[graft.plans.RollupServingRule]))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Graph scoring over relational edge lists — the link-analysis pass a
   * web-scale training corpus runs to weight documents by source quality
@@ -341,30 +341,16 @@ object Graphs {
   // materialization boundary (compute once, query many) — memoized per
   // (session, dir) like the dedup/quantizer fits; the bench reports its
   // one-time cost cold.
-  private val prCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private[operators] def invalidateCaches(s: SparkSession, d: String): Unit =
-    Seq(d, d + "#ppr", d + "#tri", d + "#hits", d + "#lp", d + "#wpr",
-      d + "#kcore", d + "#bfs", d + "#lpred", d + "#cc", d + "#sp",
-      d + "#closeness").foreach(k =>
-      prCache.remove((s, k)).foreach(_.unpersist(blocking = false)))
-  private[operators] def cacheLabels(s: SparkSession, d: String): Set[String] =
-    Seq("pr" -> d, "ppr" -> (d + "#ppr"), "tri" -> (d + "#tri"),
-      "hits" -> (d + "#hits"), "lp" -> (d + "#lp"), "wpr" -> (d + "#wpr"),
-      "kcore" -> (d + "#kcore"), "bfs" -> (d + "#bfs"),
-      "lpred" -> (d + "#lpred"), "cc" -> (d + "#cc"), "sp" -> (d + "#sp"),
-      "closeness" -> (d + "#closeness"))
-      .collect { case (l, k) if prCache.contains((s, k)) => s"graphs.$l" }
-      .toSet
+
   // customer and supplier keys share the integer space, so node ids are
   // NAMESPACED (customer c → 10⁷ + c) — without this node 7 would be
   // customer 7 and supplier 7 accidentally merged into one walk state
   private val custBase = 10000000L
   private def q84(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ranks = prCache.getOrElseUpdate((s, d), {
+    val ranks = Memo.get(s, d, "graphs.pr") {
       pageRank(purchaseEdges(s, d), "src", "dst", iters = 3)
-    })
+    }
     ranks.orderBy($"rank_scaled".desc, $"id".asc).limit(100)
   }
   private def purchaseEdges(s: SparkSession, d: String): DataFrame = {
@@ -411,12 +397,12 @@ object Graphs {
   // as q84 with a seed-indicator teleport; memoized like q84.
   private def q87(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ranks = prCache.getOrElseUpdate((s, d + "#ppr"), {
+    val ranks = Memo.get(s, d, "graphs.ppr") {
       val edges = purchaseEdges(s, d)
       val seeds = edges.select($"src".as("seed_id")).distinct()
         .filter(($"seed_id" - custBase) % 10 === 0)
       pageRank(edges, "src", "dst", iters = 3, seeds = Some(seeds))
-    })
+    }
     ranks.orderBy($"rank_scaled".desc, $"id".asc).limit(100)
   }
   private val q87Sql = {
@@ -440,7 +426,7 @@ object Graphs {
     import s.implicits._
     // a triangle census is a build-once graph artifact like the q84
     // ranks — memoized per (session, dir), bench reports the build cold
-    val counts = prCache.getOrElseUpdate((s, d + "#tri"), {
+    val counts = Memo.get(s, d, "graphs.tri") {
       val li = Tables.lineitem(s, d).filter($"l_quantity" > 25)
         .select($"l_orderkey", $"l_partkey")
       val a = li.select($"l_orderkey", $"l_partkey".as("pa"))
@@ -448,7 +434,7 @@ object Graphs {
       val edges = a.join(b, Seq("l_orderkey")).filter($"pa" =!= $"pb")
         .select($"pa", $"pb")
       triangleCounts(edges, "pa", "pb")
-    })
+    }
     counts.orderBy($"triangles".desc, $"id".asc).limit(100)
   }
   private val q88Sql =
@@ -484,14 +470,14 @@ object Graphs {
   // weighted split formula is unrolled identically in the oracle.
   private def q112(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ranks = prCache.getOrElseUpdate((s, d + "#wpr"), {
+    val ranks = Memo.get(s, d, "graphs.wpr") {
       val li = Tables.lineitem(s, d)
       val o = Tables.orders(s, d)
       val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(($"o_custkey" + custBase).as("src"), $"l_suppkey".as("dst"))
         .agg(sum($"l_quantity").cast("long").as("qty"))
       pageRank(edges, "src", "dst", iters = 3, weightCol = Some("qty"))
-    })
+    }
     ranks.orderBy($"rank_scaled".desc, $"id".asc).limit(100)
   }
   private val wEdgesSql =
@@ -522,9 +508,9 @@ object Graphs {
   // rounds, max-normalized to 10⁶; memoized like the q84 ranks.
   private def q98(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val scores = prCache.getOrElseUpdate((s, d + "#hits"), {
+    val scores = Memo.get(s, d, "graphs.hits") {
       hits(purchaseEdges(s, d), "src", "dst", iters = 2)
-    })
+    }
     scores.orderBy($"auth_scaled".desc, $"hub_scaled".desc, $"id".asc).limit(100)
   }
   private def hitsRoundSql(hPrev: String, n: Int): String =
@@ -554,7 +540,7 @@ object Graphs {
   // deterministic LP rounds; every part gets its community label.
   private def q101(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val comm = prCache.getOrElseUpdate((s, d + "#lp"), {
+    val comm = Memo.get(s, d, "graphs.lp") {
       val li = Tables.lineitem(s, d).filter($"l_quantity" > 25)
         .select($"l_orderkey", $"l_partkey")
       val a = li.select($"l_orderkey", $"l_partkey".as("pa"))
@@ -562,7 +548,7 @@ object Graphs {
       val edges = a.join(b, Seq("l_orderkey")).filter($"pa" =!= $"pb")
         .select($"pa", $"pb")
       labelPropagation(edges, "pa", "pb", iters = 2)
-    })
+    }
     comm.orderBy($"id")
   }
   private def lpRoundSql(prev: String, n: Int): String =
@@ -660,9 +646,9 @@ object Graphs {
   // build-once artifact — memoized, bench reports it cold.
   private def q125(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val core = prCache.getOrElseUpdate((s, d + "#kcore"), {
+    val core = Memo.get(s, d, "graphs.kcore") {
       kCore(purchaseEdges(s, d), "src", "dst", k = 30, rounds = 3)
-    })
+    }
     core.orderBy($"id")
   }
   private val q125Sql = {
@@ -793,12 +779,12 @@ object Graphs {
     import s.implicits._
     // memoized like the other iterative graph builds (rank/census caches):
     // the closeness table is a build-once artifact; the query path reads it
-    val clos = prCache.getOrElseUpdate((s, d + "#closeness"), {
+    val clos = Memo.get(s, d, "graphs.closeness") {
       val edges = purchaseEdges(s, d)
       val seeds = edges.select($"src".as("seed_id")).distinct()
         .filter(($"seed_id" - custBase) % 200 === 0)
       harmonicCloseness(edges, "src", "dst", seeds, maxHops = 3).persist()
-    })
+    }
     clos.orderBy($"seed_id")
   }
   // every n/d/und CTE MATERIALIZED (the q98/q125 treatment): d_k is
@@ -898,12 +884,12 @@ object Graphs {
   // trusted customer. Undirected, 3 hops; build-once artifact, memoized.
   private def q131(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dist = prCache.getOrElseUpdate((s, d + "#bfs"), {
+    val dist = Memo.get(s, d, "graphs.bfs") {
       val edges = purchaseEdges(s, d)
       val seeds = edges.select($"src".as("seed_id")).distinct()
         .filter(($"seed_id" - custBase) % 10 === 0)
       bfsDistances(edges, "src", "dst", seeds, maxHops = 3)
-    })
+    }
     dist.orderBy($"id")
   }
   private val q131Sql = {
@@ -930,7 +916,7 @@ object Graphs {
   // broker cap (40) is enforced engine-side and mirrored in the oracle.
   private def q132(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val pairs = prCache.getOrElseUpdate((s, d + "#lpred"), {
+    val pairs = Memo.get(s, d, "graphs.lpred") {
       val li = Tables.lineitem(s, d).filter($"l_quantity" > 25)
         .select($"l_orderkey", $"l_partkey")
       val a = li.select($"l_orderkey", $"l_partkey".as("pa"))
@@ -938,7 +924,7 @@ object Graphs {
       val edges = a.join(b, Seq("l_orderkey")).filter($"pa" =!= $"pb")
         .select($"pa", $"pb")
       linkPredict(edges, "pa", "pb", maxBrokerDeg = 40, minCommon = 3L)
-    })
+    }
     pairs.orderBy($"cn".desc, $"u", $"w").limit(100)
   }
   private val q132Sql =
@@ -976,11 +962,11 @@ object Graphs {
   private def q155(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // iterative build memoized like the q84 ranks; bench reports it cold
-    val comp = prCache.getOrElseUpdate((s, d + "#cc"), {
+    val comp = Memo.get(s, d, "graphs.cc") {
       Text.connectedComponents(
         purchaseEdges(s, d).select($"src".as("doc_a"), $"dst".as("doc_b")),
         localThreshold = 0L).persist()
-    })
+    }
     comp.select($"n".as("id"), $"lbl".as("component")).orderBy($"id")
   }
   // Unrolled min-label propagation + pointer jumping (the q84 unrolled-CTE
@@ -1100,9 +1086,9 @@ object Graphs {
     val seeds = edges.select($"src".as("seed_id")).distinct()
       .filter(($"seed_id" - custBase) % 50 === 0)
     // iterative build memoized like the q84 ranks; bench reports it cold
-    val dist = prCache.getOrElseUpdate((s, d + "#sp"), {
+    val dist = Memo.get(s, d, "graphs.sp") {
       shortestPaths(edges, "src", "dst", "w", seeds, budget = 6L).persist()
-    })
+    }
     dist.orderBy($"id")
   }
   private val q168Sql =

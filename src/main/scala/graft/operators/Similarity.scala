@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-dim) and
   * multimodal binary-column plumbing — the M5 extension surface.
@@ -236,24 +236,12 @@ object Similarity {
 
   // the fitted quantizer is a materialization boundary (train once, serve
   // many queries) — memoized per (session, dir) like the dedup stages
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private[operators] def invalidateCaches(s: SparkSession, d: String): Unit = {
-    kmCache.remove((s, d)).foreach(_._2.unpersist(blocking = false))
-    pqCache.remove((s, d)).foreach(_._2.unpersist(blocking = false))
-    ivfPqCache.remove((s, d)).foreach(_.unpersist(blocking = false))
-  }
-  private[operators] def cacheLabels(s: SparkSession, d: String): Set[String] =
-    Seq("sim.ivf" -> kmCache.contains((s, d)),
-      "sim.pq" -> pqCache.contains((s, d)),
-      "sim.ivfpq" -> ivfPqCache.contains((s, d)))
-      .collect { case (l, true) => l }.toSet
   private def fittedIvf(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    kmCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "sim.ivf") {
       val (c, a) = kmeansFit(Tables.embeddings(s, d), "embedding",
         nlist = nlist, iters = 4)
       (c, a.persist())
-    })
+    }
 
   /** Public IVF ANN under caller-named columns: each query probes its
     * `nprobe` nearest centroids' clusters and scans ONLY those — the
@@ -802,14 +790,12 @@ object Similarity {
   // the map-only ADC scorer. Approximate by design (k-means + quantization
   // error) → no SQL oracle; recall-vs-brute and planted-cluster exactness
   // are spec-asserted in PipelineOpsSpec.
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
   private def fittedPq(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "sim.pq") {
       val base = Tables.embeddings(s, d)
       val cb = pqFit(base, "vec_id", "embedding", m = 4, ksub = 8, iters = 2)
       (cb, pqEncode(base, "vec_id", "embedding", cb).persist())
-    })
+    }
   // q214/q229 — PQ shortlist + exact refine: q83's ADC pass widened to a
   // shortlist, re-scored exactly against the full-precision vectors,
   // final k = 10. q214 fixes shortlist ≥ |base| — there the refine sees
@@ -862,17 +848,15 @@ object Similarity {
   // the cid-attached code table is BUILD-time state (a deployment stores
   // codes partitioned by cid) — memoized so the query path is scan +
   // broadcast only, not a per-query codes⋈assignment join
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def fittedIvfPqCodes(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    ivfPqCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "sim.ivfpq") {
       val (_, assign) = fittedIvf(s, d)
       val (_, codes) = fittedPq(s, d)
       codes.join(assign, "vec_id")
         .select($"vec_id".as("neighbor_id"), $"codes", $"rn", $"cid")
         .persist()
-    })
+    }
   }
   def q85(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

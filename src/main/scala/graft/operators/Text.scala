@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Ops._
 
 /** Text-analysis + deduplication operators over the `documents` table — the
@@ -59,15 +59,13 @@ object Text {
     * Memoized per (session, dir) and persisted: three operators (Jaccard,
     * MinHash, clustering) share this relation, and recomputing the shingle
     * generation dominates their cost. */
-  private val shCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def shingleRows(s: SparkSession, d: String): DataFrame =
-    shCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "text.shingles") {
       import s.implicits._
       gramRows(Tables.documents(s, d), 4)
         .select($"doc_id", $"gram".as("s")).distinct()
         .persist()
-    })
+    }
 
   /** Drop shingles whose document frequency exceeds `cap` — skew-safely:
     * df via combiner-friendly groupBy (map-side partials shrink a
@@ -93,44 +91,10 @@ object Text {
     * uncapped: overlap *measures* hot shingles, and minhash aggregates
     * per-doc without a shingle-keyed join. */
   private[operators] val MaxDocFreq = 100L
-  private val cappedShCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def cappedShingleRows(s: SparkSession, d: String): DataFrame =
-    cappedShCache.getOrElseUpdate((s, d),
+    Memo.get(s, d, "text.cappedShingles")(
       capShingles(shingleRows(s, d), MaxDocFreq).persist())
 
-  /** Drop every materialized dedup stage for (session, dir) — call after
-    * re-ingesting/compacting the documents table in a long-lived session so
-    * the pipeline rebuilds from the new files. */
-  def invalidateCaches(s: SparkSession, d: String): Unit = {
-    Seq(shCache, cappedShCache, pairCache, labelCache, sigCache, spanCache,
-      decontamSpanCache, winnowCache).foreach { c =>
-      c.remove((s, d)).foreach(_.unpersist(blocking = false))
-    }
-    Curation.invalidateCaches(s, d)
-    Similarity.invalidateCaches(s, d)
-    Corpus.invalidateCaches(s, d)
-    Graphs.invalidateCaches(s, d)
-    Extended.invalidateCaches(s, d)
-  }
-
-  /** Which memoized CHAIN artifacts are live for (session, dir) —
-    * everything [[invalidateCaches]] would drop, EXCLUDING the scalar
-    * count caches (a Long recount is not a chain build worth cold-timing).
-    * [[graft.ColdDetect]] derives Bench's cold-set contract from this:
-    * a query that repopulates any chain after a full invalidation is a
-    * query whose warm time hides a build, and every chain LABEL must
-    * have at least one cold-timed representative. */
-  def cacheLabels(s: SparkSession, d: String): Set[String] =
-    Seq("text.shingles" -> shCache, "text.cappedShingles" -> cappedShCache,
-      "text.pairs" -> pairCache, "text.labels" -> labelCache,
-      "text.sigs" -> sigCache, "text.spans" -> spanCache,
-      "text.decontamSpans" -> decontamSpanCache,
-      "text.winnow" -> winnowCache)
-      .collect { case (l, c) if c.contains((s, d)) => l }.toSet ++
-      Curation.cacheLabels(s, d) ++ Similarity.cacheLabels(s, d) ++
-      Corpus.cacheLabels(s, d) ++ Graphs.cacheLabels(s, d) ++
-      Extended.cacheLabels(s, d)
   /** Shared minhash oracle snippets — the SQL twins of minhashSigsFrom /
     * bandedKeys / estSim, reused by every minhash oracle (q35, q68, q227,
     * q245) so signature salts and banding can never drift per-oracle:
@@ -411,10 +375,8 @@ object Text {
        |WHERE CAST(shared AS DOUBLE) / least(x.n, y.n) >= 0.9
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrElseUpdate((s, d),
+    Memo.get(s, d, "text.pairs")(
       jaccardPairsFrom(cappedShingleRows(s, d), 0.8).persist())
   private def q34(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -504,10 +466,8 @@ object Text {
 
   // sigs feeds three branches (banding + both verify sides); memoized +
   // persisted per (session, dir) so repeat calls don't stack cached copies
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((s, d), minhashSigsFrom(shingleRows(s, d), K).persist())
+    Memo.get(s, d, "text.sigs")(minhashSigsFrom(shingleRows(s, d), K).persist())
 
   private def q35(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -620,10 +580,8 @@ object Text {
   // frame is the natural materialization boundary of the audit → removal
   // pipeline (tiny: one row per maximal span) — memoized so q232's
   // cleanup reuses it instead of recomputing the gram aggregate.
-  private val spanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def spansOf(s: SparkSession, d: String): DataFrame =
-    spanCache.getOrElseUpdate((s, d),
+    Memo.get(s, d, "text.spans")(
       Dedup.repeatedSpans(Tables.documents(s, d), "doc_id", "text", SpanK)
         .persist())
   private def q231(s: SparkSession, d: String): DataFrame = {
@@ -750,15 +708,13 @@ object Text {
   // the selected-fingerprint frame feeds q242/q243/q246 — memoized +
   // persisted per (session, dir) like the shingle/span stages (its build
   // is surfaced COLD in Bench via q242's coldNames entry)
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   // the persisted index also carries the decoded 16-byte digest (fpb),
   // computed once at build time: every consumer's equality work (the
   // overlap/span/decontam joins, distincts and df caps) keys on it
   // instead of re-hashing the 32-char hex string per row (guide §4)
   private def winnowPicks(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    winnowCache.getOrElseUpdate((s, d),
+    Memo.get(s, d, "text.winnow")(
       TextStats.winnow(Tables.documents(s, d), "doc_id", "text",
         WinK, WinW).withColumn("fpb", unhex($"fp")).persist())
   }
@@ -934,15 +890,13 @@ object Text {
   // in the held-out benchmark (src0) — the n-gram-collision removal the
   // big-model training reports describe, as spans instead of q60's
   // whole-document drops — and the cleaned corpus with those quotes cut.
-  private val decontamSpanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def decontamSpansOf(s: SparkSession, d: String): DataFrame =
-    decontamSpanCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "text.decontamSpans") {
       import s.implicits._
       val docs = Tables.documents(s, d)
       Dedup.spansAgainst(docs.filter($"source" =!= "src0"), "doc_id", "text",
         docs.filter($"source" === "src0"), "doc_id", "text", SpanK).persist()
-    })
+    }
   private def q237(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     decontamSpansOf(s, d).orderBy($"doc_id", $"span_start")
@@ -1056,13 +1010,11 @@ object Text {
   // graphs the same loop structure runs with large-star/small-star
   // optimizations — the per-round plan (edges ⋈ labels, min-agg) is
   // shuffle-on-key and size-stable.
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrElseUpdate((s, d), {
+    Memo.get(s, d, "text.labels") {
       import s.implicits._
       connectedComponents(nearDupPairs(s, d).select($"doc_a", $"doc_b")).persist()
-    })
+    }
   private def q47(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val labels = clusterLabels(s, d)

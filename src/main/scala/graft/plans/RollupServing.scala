@@ -114,6 +114,11 @@ case class RollupServingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def rewrite(agg: Aggregate, reg: Registered,
       conds: Seq[Expression]): Option[LogicalPlan] = {
+    // a registration whose rollup dir is gone (a released Memo fixture)
+    // serves the raw table instead of failing on the missing path
+    val rp = new org.apache.hadoop.fs.Path(reg.rollupPath)
+    if (!rp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(rp))
+      return None
     // every dim / filter attribute must exist (same name, usable type) in
     // the rollup relation; measures are checked per aggregate below
     val rollupRel = spark.read.parquet(reg.rollupPath)

@@ -27,6 +27,11 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
 
+  /** The session's UUID (classic runtime): unique per session for the
+    * JVM's life, so a key built from it never aliases a dead session. */
+  def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
   /** Build a DataFrame from a catalyst LogicalPlan (classic Dataset.ofRows). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =

@@ -272,10 +272,10 @@ class CorpusSpec extends AnyFunSuite {
     assert(out.collect().toSeq == again.collect().toSeq)
   }
 
-  test("invalidateCaches rebuilds q66/q68 to identical results") {
+  test("Memo.invalidate rebuilds q66/q68 to identical results") {
     val before68 = SparkEntry.queries("q68_minhash_against")(spark, sf).collect().toSeq
     val before66 = SparkEntry.queries("q66_term_rarity")(spark, sf).collect().toSeq
-    operators.Text.invalidateCaches(spark, sf)
+    Memo.invalidate(spark, sf)
     assert(SparkEntry.queries("q68_minhash_against")(spark, sf).collect().toSeq == before68)
     assert(SparkEntry.queries("q66_term_rarity")(spark, sf).collect().toSeq == before66)
   }

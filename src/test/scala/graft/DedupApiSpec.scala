@@ -198,10 +198,10 @@ class DedupApiSpec extends AnyFunSuite {
     assert(fp(100L) == fp(101L) && fp(102L) != fp(103L))
   }
 
-  test("invalidateCaches rebuilds the memoized stages to identical results") {
+  test("Memo.invalidate rebuilds the memoized stages to identical results") {
     val before = SparkEntry.queries("q34_dedup_ngram_jaccard")(spark, sf)
       .collect().toSeq
-    operators.Text.invalidateCaches(spark, sf)
+    Memo.invalidate(spark, sf)
     val after = SparkEntry.queries("q34_dedup_ngram_jaccard")(spark, sf)
       .collect().toSeq
     assert(before == after)
