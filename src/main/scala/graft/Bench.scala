@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query wall seconds.
   *
   * Methodology (round 17 — kill-proof): the timed action is unchanged
@@ -116,15 +114,7 @@ object Bench {
     val tMain = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tMain) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Graft.session(appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Keep the captured WARN tail a real signal channel: the 13 audited
     // bounded-input global-window queries (PlanSpec whitelist) each emit a
@@ -170,7 +160,7 @@ object Bench {
     val calibN = 4500000000L
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, calibN, 1L, cpus.toInt)
+      spark.range(0L, calibN, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id % 1000003) AS s").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -221,13 +211,10 @@ object Bench {
       // chain full-runs: a last-resort payload, clearly marked "warmup".
       // Passes 2+ may be TRUNCATED by the mid-pass deadline guard, so the
       // per-query min runs over the passes that contain the query; pass 1
-      // is complete by design, so every name always has a value.
+      // is complete by design, so every name has a value (a name missing
+      // from every pass breaks that invariant, and `min` throws).
       val results: Seq[(String, Double)] =
-        if (passes.nonEmpty)
-          names.flatMap { n =>
-            val vs = passes.flatMap(_.get(n))
-            if (vs.nonEmpty) Some(n -> vs.min) else warmupWalls.get(n).map(n -> _)
-          }
+        if (passes.nonEmpty) names.map(n => n -> passes.flatMap(_.get(n)).min)
         else warmupWalls.toSeq.sortBy(_._1)
       val coldPasses = coldPassList.toSeq
       val coldByName = coldPasses.map(_.toMap)
@@ -378,12 +365,11 @@ object Bench {
       if (!cut) passWalls += (System.nanoTime() - t0) / 1e9
       emit(Some(s"pass${warmPasses.size}"))
     }
-    // pass-1 gate (ADVICE r17): warmupS is dominated by the cheap
-    // plan-touches since the round-17 warmup restructure, so it badly
-    // underestimates a full pass; the 32 chain queries' cold walls are
-    // the better same-run estimate (measured ≈ 0.7–1.1× a full warm
-    // pass — the chains are the slowest queries and cold at that).
-    val pass1Est = math.max(warmupWalls.values.sum, warmupS - warmupWalls.values.sum)
+    // pass-1 gate (ADVICE r17): the chain queries' cold walls are the
+    // same-run estimate of a full pass (measured ≈ 0.7–1.1× a full warm
+    // pass — the chains are the slowest queries and cold at that); the
+    // rest of warmupS is plan-touches, which measure no pass at all.
+    val pass1Est = warmupWalls.values.sum
     if (remaining < pass1Est && warmupWalls.nonEmpty) {
       // contention ate the whole budget during warmup: the warmup-derived
       // line is the artifact — exit 0 cleanly rather than overrun

@@ -2,18 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine facade: one-call session bootstrap with graft's settings and
-  * function registry installed — what a library user starts from.
+/** Engine facade: the one session bootstrap. Every graft main, the test
+  * fixture and a library user start from [[session]], and it is the only
+  * place graft's optimizer rules and SQL functions are installed — once,
+  * when the session starts, never per query.
   *
   * Settings mirror the builder-environment conventions (SURVEY.md §6 env):
   * shuffle partitions sized to cores (not the 200 default), AQE on (runtime
   * re-planning incl. skew-join split), UTC session time, nano-parquet
-  * tolerance for event streams.
+  * tolerance for event streams. The core count is `SPARK_GRAFT_CPUS` when
+  * set, else the JVM's available processors; it sizes the default master
+  * (`local[cores]`) and the default shuffle partitions.
+  *
+  * A `newSession()` clone of the returned session carries neither the
+  * rules nor the functions. A spark-submit deployment, whose sessions graft
+  * does not build, gets both from `spark.sql.extensions` set to
+  * [[plans.GraftExtensions]].
   */
 object Graft {
-  def session(master: String = "local[*]", appName: String = "graft",
+  private def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def session(master: String = s"local[$cores]", appName: String = "graft",
       shufflePartitions: Option[Int] = None): SparkSession = {
-    val cores = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -26,8 +37,7 @@ object Graft {
       .getOrCreate()
     functions.Registry.install(spark)
     // the session-local equivalents of GraftExtensions' injected rules
-    // (metadata-only manifest aggregates; rollup-mode serving) — a
-    // spark-submit deployment gets them via spark.sql.extensions instead
+    // (metadata-only manifest aggregates; rollup-mode serving)
     val rules = Seq(plans.ManifestAggregates(spark),
       plans.RollupServingRule(spark))
       .filterNot(r => spark.experimental.extraOptimizations
@@ -36,7 +46,4 @@ object Graft {
       spark.experimental.extraOptimizations ++ rules
     spark
   }
-
-  /** Open a scale-factor directory as a registered catalog. */
-  def open(spark: SparkSession, dir: String): Unit = Tables.register(spark, dir)
 }

@@ -46,22 +46,24 @@ object Tables {
   /** Memoized view registration per (session, view name): re-running
     * `createOrReplaceTempView` with the identical frame on every query
     * build is catalog-metadata churn the SQL-surface queries paid per
-    * call. The record holds WHAT was registered (dir + tag); a different
-    * dir or tag under the same name re-registers, and so does a view
-    * dropped from the catalog since; otherwise registration is a no-op.
+    * call. The record holds WHAT was registered (dir + tag) and the dir's
+    * memo epoch, a token [[Memo.invalidate]] drops; a different dir or tag
+    * under the same name re-registers, and so does a view dropped from the
+    * catalog since or one whose dir was invalidated (a rewritten table must
+    * not keep the old file listing); otherwise registration is a no-op.
     * This is a record of catalog state, not a [[Memo]]: one name can
     * re-point to another dir. Metadata only — a view holds an unexecuted
     * plan. */
   private val viewReg = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, String)]
+    .empty[(String, String), (String, String, AnyRef)]
 
   def registerViewOnce(spark: SparkSession, dir: String, name: String,
       tag: String = "")(frame: => DataFrame): Unit = {
     val k = (Bridge.sessionId(spark), name)
-    if (!viewReg.get(k).contains((dir, tag)) ||
-        !spark.catalog.tableExists(name)) {
+    val rec = (dir, tag, Memo.get(spark, dir, "tables.viewEpoch")(new AnyRef))
+    if (!viewReg.get(k).contains(rec) || !spark.catalog.tableExists(name)) {
       frame.createOrReplaceTempView(name)
-      viewReg(k) = (dir, tag)
+      viewReg(k) = rec
     }
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,20 +14,11 @@ object Verify {
     val only: Option[Seq[String]] =
       if (sqlOnly) Some(Seq.empty)
       else if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Graft.session(appName = "graft-verify")
     // SPARK_GRAFT_AQE=false re-runs the whole gate with adaptive execution
     // off — the robustness sweep that caught q132's AQE-off planner fault
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 otherwise
-      // refuses; read it as epoch-nano longs (exact integer arithmetic).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_AQE")
+      .foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries

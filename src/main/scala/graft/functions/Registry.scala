@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.plans.{JaroWinkler, ScaledDotProduct}
 
@@ -11,17 +12,15 @@ import graft.plans.{JaroWinkler, ScaledDotProduct}
   */
 object Registry {
   // once per session: re-registering an existing temp function logs a
-  // "replaced a previously registered function" WARN per call site, which
-  // pollutes the bench tail the log-hygiene work keeps as a signal channel
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = installed.synchronized {
-    if (installed.add(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+  // "replaced a previously registered function" WARN, which pollutes the
+  // bench tail the log-hygiene work keeps as a signal channel; the
+  // session's own registry says whether it already holds them
+  def install(spark: SparkSession): Unit = synchronized {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(FunctionIdentifier("scaled_dot"))) {
+      reg.createOrReplaceTempFunction(
         "scaled_dot", exprs => ScaledDotProduct(exprs.head, exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      reg.createOrReplaceTempFunction(
         "jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)), "built-in")
     }
   }

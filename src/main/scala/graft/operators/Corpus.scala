@@ -584,7 +584,6 @@ object Corpus {
   // (type|size) block at the gated scales, so the result is q240's; a
   // production run tunes the literal like linkRecords' maxBlockSize.
   private def q260(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.install(s)
     Tables.registerViewOnce(s, d, "graft_part")(Tables.part(s, d))
     s.sql(
       """WITH b0 AS (SELECT p_partkey, p_name, p_brand,
@@ -613,7 +612,6 @@ object Corpus {
   // by construction at 26·27 one-row-per-bucket entries, the q235
   // skeleton's audited class). Gated by q241's exact oracle.
   private def q261(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.install(s)
     Tables.registerViewOnce(s, d, "graft_part")(Tables.part(s, d))
     s.sql(
       """WITH base AS (

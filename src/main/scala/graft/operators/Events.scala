@@ -1416,12 +1416,12 @@ object Events {
   // q170 — rollup-mode serving end-to-end (reference rollup parity): the
   // ingest-side rollup segments are built once (a Memo fixture per
   // (session, dir), deleted on invalidate and at context end), the
-  // raw events path is registered, the RollupServingRule is installed,
-  // and the query below — written against the RAW table — is served from
-  // the rollup. The oracle aggregates the raw table in DuckDB, so the
-  // driver's gate proves the rewrite is answer-identical; the plan-level
-  // lock (the scan really moves to the rollup, non-derivable shapes
-  // don't) is RollupServingSpec.
+  // raw events path is registered for this session (Graft.session
+  // installed the RollupServingRule), and the query below — written
+  // against the RAW table — is served from the rollup. The oracle
+  // aggregates the raw table in DuckDB, so the oracle gate proves the
+  // rewrite is answer-identical; the plan-level lock (the scan really
+  // moves to the rollup, non-derivable shapes don't) is RollupServingSpec.
   private def q170(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val rawPath = graft.Tables.path(d, "events")
@@ -1435,11 +1435,7 @@ object Events {
         .write.mode("overwrite").parquet(t.resolve("events_rollup"))
       t
     }.resolve("events_rollup")
-    graft.plans.RollupServing.registerFromSpec(rawPath, rollupPath, spec)
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.RollupServingRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.RollupServingRule(s)
+    graft.plans.RollupServing.registerFromSpec(s, rawPath, rollupPath, spec)
     s.read.parquet(rawPath)
       .groupBy($"event_type")
       .agg(dsum($"value").as("sum_value"), count(lit(1)).as("n"))

@@ -275,14 +275,13 @@ object Relational {
       |LIMIT 25""".stripMargin
 
   // q221 — the pure-SQL client path end-to-end: tables registered as temp
-  // views, graft's native functions installed (Registry), and the report
-  // written as ONE SQL string through spark.sql — including the
+  // views, graft's native functions (installed by Graft.session), and the
+  // report written as ONE SQL string through spark.sql — including the
   // jaro_winkler native expression in the WHERE, proving the registered
   // function surface works from SQL text (the reference's embedded-engine
   // usage mode; SURVEY §2.A). Views are graft_-prefixed so the
   // registration cannot collide with other operators' names.
   private def q221(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.install(s)
     Tables.registerViewOnce(s, d, "graft_lineitem")(Tables.lineitem(s, d))
     Tables.registerViewOnce(s, d, "graft_orders")(Tables.orders(s, d))
     Tables.registerViewOnce(s, d, "graft_customer")(Tables.customer(s, d))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions …
   *
   * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
-  * Complements graft.functions.Registry (which installs into one session).
+  * It installs the same functions and optimizer rules `graft.Graft.session`
+  * installs into the sessions graft builds itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

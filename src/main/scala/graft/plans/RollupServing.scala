@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Rollup-serving rewrite — the query side of the reference's rollup mode.
@@ -42,9 +43,9 @@ import org.apache.spark.sql.types._
   * (partial→final aggregation, dim filters pushed to parquet) is preserved
   * because the rewrite emits a plain scan + aggregate.
   *
-  * Register per raw table via [[RollupServing.register]]; install the rule
-  * session-wide through `GraftExtensions` or
-  * `spark.experimental.extraOptimizations`.
+  * Register per (session, raw table) via [[RollupServing.register]]. The
+  * rule is installed by `graft.Graft.session`, or by `GraftExtensions` in a
+  * spark-submit deployment.
   */
 object RollupServing {
   /** What the rollup segments can answer. `sums`/`mins`/`maxs` name RAW
@@ -55,20 +56,23 @@ object RollupServing {
       sums: Set[String], mins: Set[String], maxs: Set[String],
       cnt: Option[String])
 
+  // keyed on (session id, raw path): a registration serves only the
+  // session that made it, so one session's fixture never answers another's
+  // aggregates over the same path
   private val registry =
-    scala.collection.concurrent.TrieMap.empty[String, Registered]
+    scala.collection.concurrent.TrieMap.empty[(String, String), Registered]
 
-  private def key(p: String): String =
-    p.stripPrefix("file:").stripSuffix("/")
+  private def key(spark: SparkSession, p: String): (String, String) =
+    (Bridge.sessionId(spark), p.stripPrefix("file:").stripSuffix("/"))
 
-  def register(rawPath: String, reg: Registered): Unit =
-    registry.put(key(rawPath), reg)
+  def register(spark: SparkSession, rawPath: String, reg: Registered): Unit =
+    registry.put(key(spark, rawPath), reg)
 
   /** Derive the registration from the ingest-side rollup spec. */
-  def registerFromSpec(rawPath: String, rollupPath: String,
-      spec: graft.streaming.Realtime.RollupSpec): Unit = {
+  def registerFromSpec(spark: SparkSession, rawPath: String,
+      rollupPath: String, spec: graft.streaming.Realtime.RollupSpec): Unit = {
     import graft.streaming.Realtime._
-    register(rawPath, Registered(rollupPath,
+    register(spark, rawPath, Registered(rollupPath,
       dims = spec.dims.toSet,
       sums = spec.metrics.collect { case (m, Sum) => m }.toSet,
       mins = spec.metrics.collect { case (m, Min) => m }.toSet,
@@ -76,11 +80,10 @@ object RollupServing {
       cnt = spec.metrics.collectFirst { case (m, Cnt) => m }))
   }
 
-  def unregister(rawPath: String): Unit = registry.remove(key(rawPath))
-
-  private[plans] def lookup(paths: Seq[String]): Option[Registered] =
+  private[plans] def lookup(spark: SparkSession,
+      paths: Seq[String]): Option[Registered] =
     paths match {
-      case Seq(p) => registry.get(key(p))
+      case Seq(p) => registry.get(key(spark, p))
       case _ => None
     }
 }
@@ -95,7 +98,7 @@ case class RollupServingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     plan match {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation =>
-          lookup(fs.location.rootPaths.map(_.toString)).map((_, conds))
+          lookup(spark, fs.location.rootPaths.map(_.toString)).map((_, conds))
         case _ => None
       }
       case Project(ps, child) if ps.forall(_.isInstanceOf[AttributeReference]) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** A/B timing scratch harness: time a comma-separated list of queries
   * (all queries with no list) for N passes under the session config
   * given by env, printing per-query seconds per pass. Unlike Bench this
@@ -10,19 +8,20 @@ import org.apache.spark.sql.SparkSession
   *
   *   SPARK_GRAFT_AB_CONF="spark.sql.adaptive.coalescePartitions.parallelismFirst=false,spark.sql.adaptive.advisoryPartitionSizeInBytes=16m" \
   *   sbt "runMain graft.tools.AbTime q03_agg_tpch1,q13_join_facts"
+  *
+  * SPARK_GRAFT_AB_CONF entries are set on the running session, so they
+  * must be runtime confs: a static key fails with Spark's own error naming
+  * it. Static keys go in as `-Dspark.…` system properties of the forked
+  * JVM, the way graftbench/run.py sets the codegen cache:
+  *
+  *   sbt 'set javaOptions += "-Dspark.sql.codegen.cache.maxEntries=1000"' \
+  *     "runMain graft.tools.AbTime q03_agg_tpch1"
   */
 object AbTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_AB_PASSES", "3").toInt
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.Graft.session(appName = "graft-abtime")
     // entries split on ';' (conf VALUES may contain ','); ',' is still
     // accepted as a separator when no ';' is present, for the historical
     // invocations. An entry without '=' fails loudly, not with MatchError.
@@ -30,13 +29,12 @@ object AbTime {
       val sep = if (raw.contains(';')) ';' else ','
       raw.split(sep).map(_.trim).filter(_.nonEmpty).foreach { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
+          case Array(k, v) => spark.conf.set(k, v)
           case _ => sys.error(
             s"SPARK_GRAFT_AB_CONF entry is not key=value: '$kv'")
         }
       }
     }
-    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.flatMap(_.split(",")).toSeq

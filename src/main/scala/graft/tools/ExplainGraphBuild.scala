@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -18,13 +17,7 @@ import graft.Tables
 object ExplainGraphBuild {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Graft.session(appName = "graft-explain-graph-build")
     spark.sparkContext.setLogLevel("ERROR")
     // the q84/q87/q98/q112 edge relation (Graphs.purchaseEdges): distinct
     // customer→supplier purchase pairs, customers namespaced by +10^7

@@ -4,7 +4,6 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.SparkSession
 
 /** Hint-hygiene audit: `runMain graft.tools.HintScan [sfDir] [prefixes]`
   * optimizes every gate query while capturing Catalyst's HintErrorLogger
@@ -18,12 +17,7 @@ object HintScan {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     val prefixes = args.lift(1).map(_.split(",").toSeq)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Graft.session(appName = "graft-hintscan")
     spark.sparkContext.setLogLevel("WARN")
 
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -39,7 +39,6 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("jaro_winkler is registered for SQL text") {
-    functions.Registry.install(spark)
     val got = spark.sql(
       "SELECT jaro_winkler('MARTHA', 'MARHTA') AS s").head().getDouble(0)
     assert(got == 0.9611111111111111)

@@ -168,4 +168,29 @@ class MemoSpec extends AnyFunSuite {
     assert(builds == 2 && spark.catalog.tableExists(name))
     spark.catalog.dropTempView(name)
   }
+
+  test("registerViewOnce re-registers a view after its dir is invalidated") {
+    val name = "graft_memospec_rewritten"
+    val dir = Files.createTempDirectory("graft_memospec_view_").toString
+    def write(n: Long): Unit =
+      spark.range(n).write.mode("overwrite").parquet(Tables.path(dir, "t"))
+    def reg(): Unit =
+      Tables.registerViewOnce(spark, dir, name)(Tables.df(spark, dir, "t"))
+    try {
+      write(3)
+      reg()
+      assert(spark.table(name).count() == 3)
+      write(5)
+      Memo.invalidate(spark, dir)
+      reg()
+      assert(spark.table(name).count() == 5)
+    } finally {
+      spark.catalog.dropTempView(name)
+      Memo.invalidate(spark, dir)
+      val walk = Files.walk(Paths.get(dir))
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+  }
 }

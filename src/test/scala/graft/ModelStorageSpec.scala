@@ -95,7 +95,9 @@ class ModelStorageSpec extends AnyFunSuite {
     val keptFiltered = index.lastKept
     assert(keptFiltered >= 1 && keptFiltered < 8,
       s"index kept $keptFiltered of 8 files for the range predicate")
-    assert(df.count() == li.count()) // unfiltered read keeps everything
+    // an unfiltered scan keeps everything (a bare count() would be
+    // answered from the manifest by ManifestAggregates, with no scan)
+    assert(df.collect().length == li.count())
     assert(index.lastKept == 8)
   }
 
@@ -149,65 +151,58 @@ class ModelStorageSpec extends AnyFunSuite {
   }
 
   test("ManifestAggregates answers count/min/max from metadata, no scan") {
-    import graft.plans.{ManifestAggregates, ManifestFileIndex}
+    import graft.plans.ManifestFileIndex
     val dir = Files.createTempDirectory("graft-magg").toString + "/li"
     val li = Tables.lineitem(spark, sf)
     Segments.write(li, dir, sortCols = Seq("l_orderkey"),
       indexedCols = Seq("l_orderkey", "l_shipdate", "l_quantity"), numSegments = 8)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ManifestAggregates(spark)
-    try {
-      val df = ManifestFileIndex.read(spark, dir)
-      val out = df.agg(
-        count(lit(1)).as("n"),
-        min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
-        min(col("l_shipdate")).as("min_sd"), max(col("l_quantity")).as("max_q"))
-      // the whole aggregate collapses to metadata: no scan in the plan
-      val plan = out.queryExecution.optimizedPlan.toString()
-      assert(plan.contains("LocalRelation"), s"expected metadata answer:\n$plan")
-      assert(!plan.contains("Relation") || !plan.contains("parquet"),
-        s"scan survived the rewrite:\n$plan")
-      // and the metadata answer equals the scan answer exactly
-      val expect = spark.read.parquet(dir).agg(
-        count(lit(1)), min(col("l_orderkey")), max(col("l_orderkey")),
-        min(col("l_shipdate")), max(col("l_quantity"))).collect().head
-      assert(out.collect().head == expect)
-      // shapes metadata can't answer are left alone: filters, count(col),
-      // unindexed columns, and TZ-aware timestamps (manifest strings were
-      // rendered under the build session's timezone — a session with a
-      // different spark.sql.session.timeZone would get shifted bounds, so
-      // they must take the always-correct scan path)
-      val filtered = df.filter(col("l_orderkey") > 10L).agg(min(col("l_orderkey")))
-      assert(!filtered.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
-      val countCol = df.agg(count(col("l_returnflag")))
-      assert(!countCol.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
-      val unindexed = df.agg(min(col("l_extendedprice")))
-      assert(!unindexed.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
-      // (l_shipdate above is TimestampNTZ in this parquet — TZ-independent
-      // strings, legitimately collapsible; a TZ-AWARE timestamp must not be)
-      val tsDir = Files.createTempDirectory("graft-magg-ts").toString + "/ts"
-      val tsDf = spark.range(100).select(col("id"),
-        timestamp_seconds(col("id") * 3600).as("ts"))
-      Segments.write(tsDf, tsDir, sortCols = Seq("id"),
-        indexedCols = Seq("id", "ts"), numSegments = 2)
-      val tdf = ManifestFileIndex.read(spark, tsDir)
-      assert(tdf.schema("ts").dataType ==
-        org.apache.spark.sql.types.TimestampType)
-      val tzTimestamp = tdf.agg(min(col("ts")))
-      assert(!tzTimestamp.queryExecution.optimizedPlan.toString().contains("LocalRelation"),
-        "TZ-aware timestamp bounds depend on the build session timezone and " +
-          "must take the scan path")
-      // the fallback still computes the right value through the scan
-      assert(tzTimestamp.collect().head ==
-        spark.read.parquet(tsDir).agg(min(col("ts"))).collect().head)
-      // while the TZ-independent columns of the same table still collapse
-      assert(tdf.agg(min(col("id"))).queryExecution.optimizedPlan.toString()
-        .contains("LocalRelation"))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[ManifestAggregates])
-    }
+    // ManifestAggregates is installed by Graft.session
+    val df = ManifestFileIndex.read(spark, dir)
+    val out = df.agg(
+      count(lit(1)).as("n"),
+      min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
+      min(col("l_shipdate")).as("min_sd"), max(col("l_quantity")).as("max_q"))
+    // the whole aggregate collapses to metadata: no scan in the plan
+    val plan = out.queryExecution.optimizedPlan.toString()
+    assert(plan.contains("LocalRelation"), s"expected metadata answer:\n$plan")
+    assert(!plan.contains("Relation") || !plan.contains("parquet"),
+      s"scan survived the rewrite:\n$plan")
+    // and the metadata answer equals the scan answer exactly
+    val expect = spark.read.parquet(dir).agg(
+      count(lit(1)), min(col("l_orderkey")), max(col("l_orderkey")),
+      min(col("l_shipdate")), max(col("l_quantity"))).collect().head
+    assert(out.collect().head == expect)
+    // shapes metadata can't answer are left alone: filters, count(col),
+    // unindexed columns, and TZ-aware timestamps (manifest strings were
+    // rendered under the build session's timezone — a session with a
+    // different spark.sql.session.timeZone would get shifted bounds, so
+    // they must take the always-correct scan path)
+    val filtered = df.filter(col("l_orderkey") > 10L).agg(min(col("l_orderkey")))
+    assert(!filtered.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
+    val countCol = df.agg(count(col("l_returnflag")))
+    assert(!countCol.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
+    val unindexed = df.agg(min(col("l_extendedprice")))
+    assert(!unindexed.queryExecution.optimizedPlan.toString().contains("LocalRelation"))
+    // (l_shipdate above is TimestampNTZ in this parquet — TZ-independent
+    // strings, legitimately collapsible; a TZ-AWARE timestamp must not be)
+    val tsDir = Files.createTempDirectory("graft-magg-ts").toString + "/ts"
+    val tsDf = spark.range(100).select(col("id"),
+      timestamp_seconds(col("id") * 3600).as("ts"))
+    Segments.write(tsDf, tsDir, sortCols = Seq("id"),
+      indexedCols = Seq("id", "ts"), numSegments = 2)
+    val tdf = ManifestFileIndex.read(spark, tsDir)
+    assert(tdf.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    val tzTimestamp = tdf.agg(min(col("ts")))
+    assert(!tzTimestamp.queryExecution.optimizedPlan.toString().contains("LocalRelation"),
+      "TZ-aware timestamp bounds depend on the build session timezone and " +
+        "must take the scan path")
+    // the fallback still computes the right value through the scan
+    assert(tzTimestamp.collect().head ==
+      spark.read.parquet(tsDir).agg(min(col("ts"))).collect().head)
+    // while the TZ-independent columns of the same table still collapse
+    assert(tdf.agg(min(col("id"))).queryExecution.optimizedPlan.toString()
+      .contains("LocalRelation"))
   }
 
   test("ManifestFileIndex prunes on LIKE-prefix predicates (CMap parity)") {

@@ -32,11 +32,8 @@ class RollupServingSpec extends AnyFunSuite {
       Seq(("value", Realtime.Sum), ("arr", Realtime.Cnt)), arrival = "arr")
     Realtime.rollupBatch(spark.read.parquet(rawPath), spec)
       .write.mode("overwrite").parquet(rollupPath)
-    RollupServing.registerFromSpec(rawPath, rollupPath, spec)
-    if (!spark.experimental.extraOptimizations.exists(
-        _.isInstanceOf[RollupServingRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RollupServingRule(spark)
+    // the rule itself is installed by Graft.session
+    RollupServing.registerFromSpec(spark, rawPath, rollupPath, spec)
   }
 
   private val D = DecimalType(30, 6)
@@ -123,5 +120,22 @@ class RollupServingSpec extends AnyFunSuite {
     Seq((1L, 2L)).toDF("a", "b").write.mode("overwrite").parquet(other)
     val q = spark.read.parquet(other).groupBy($"a").agg(count(lit(1)))
     assert(!servedFromRollup(q))
+  }
+
+  test("a registration serves only the session that made it") {
+    setup
+    def agg(s: org.apache.spark.sql.SparkSession) = s.read.parquet(rawPath)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    // a clone carries no rules: add the rule by hand, the one install a
+    // test makes itself
+    val second = spark.newSession()
+    second.experimental.extraOptimizations = Seq(RollupServingRule(second))
+    val q2 = agg(second)
+    assert(!servedFromRollup(q2),
+      s"second session served from the first one's rollup: ${scanned(q2)}")
+    assert(scanned(q2).exists(_.stripPrefix("file:").stripSuffix("/") == rawPath))
+    assert(servedFromRollup(agg(spark)))
+    assert(q2.orderBy("event_type").collect().map(_.getLong(1)).toSeq ==
+      Seq(3L, 3L))
   }
 }

@@ -20,7 +20,6 @@ class ScaledDotSpec extends AnyFunSuite {
   }
 
   test("scaled_dot is registered for SQL text") {
-    functions.Registry.install(spark)
     Tables.embeddings(spark, sf).limit(5).createOrReplaceTempView("emb5")
     val out = spark.sql(
       "SELECT vec_id, scaled_dot(embedding, embedding) AS n FROM emb5").collect()
