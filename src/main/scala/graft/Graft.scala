@@ -34,6 +34,10 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // room for every generated class a workload reuses (Spark's default of
+      // 100 evicts and recompiles them). A static conf: it only takes effect
+      // when this call creates the JVM's first session.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     functions.Registry.install(spark)
     // the session-local equivalents of GraftExtensions' injected rules

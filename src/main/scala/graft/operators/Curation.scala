@@ -1213,6 +1213,12 @@ object Curation {
     * column marking the target exemplars. Output: (doc_id, n_grams,
     * affinity_ppm) for every document with at least one gram.
     *
+    * Precondition: `isTargetCol` is constant per document id. The rollup
+    * carries a doc's flag as max(); the plan also carries min() and fails
+    * (raise_error, in the scoring pass — no extra job) when a doc id has
+    * rows with differing flags, instead of silently scoring it as a
+    * target.
+    *
     * Plan: ONE corpus gram pass, collapsed immediately to the
     * (doc, bucket) grain — ≤ #docs × `buckets` rows; the bucket stats,
     * the LUT and the scoring all derive from that small frame (round 18:
@@ -1236,7 +1242,8 @@ object Curation {
         n, carryCols = Seq("__tgt"))
       .withColumn("__b", pmod(md5Long($"gram"), lit(buckets.toLong)))
     // the one corpus-sized pass: gram instances per (doc, bucket);
-    // __tgt is doc-constant, so max() carries it exactly. SNAPPED (the
+    // __tgt is doc-constant, so max() carries it exactly (min() rides
+    // along for the precondition check in the scoring pass). SNAPPED (the
     // q139 materialized-rollup pattern, lazily): the stats and scoring
     // consumers prune different columns, which splits a lazy shared
     // aggregate back into two corpus passes (verified on the --exec
@@ -1244,7 +1251,8 @@ object Curation {
     // gram pass once and both consumers read the ≤ #docs × buckets
     // snapshot.
     val per = grams.groupBy($"doc_id", $"__b")
-      .agg(count(lit(1)).as("__nb"), max($"__tgt").cast(LongType).as("__tgt"))
+      .agg(count(lit(1)).as("__nb"), max($"__tgt").cast(LongType).as("__tgt"),
+        min($"__tgt").cast(LongType).as("__tmin"))
       .localCheckpoint(eager = false)
     val stats = per.groupBy($"__b").agg(
       sum($"__tgt" * $"__nb").as("__t"),
@@ -1262,7 +1270,11 @@ object Curation {
           .cast(LongType).as("__aff"))
     per.join(broadcast(lut), "__b")
       .groupBy($"doc_id")
-      .agg(sum($"__nb").as("n_grams"), sum($"__nb" * $"__aff").as("__sum"))
+      .agg(sum($"__nb").as("n_grams"), sum($"__nb" * $"__aff").as("__sum"),
+        max($"__tgt").as("__tmax"), min($"__tmin").as("__tmin"))
+      .filter(when($"__tmax" =!= $"__tmin", raise_error(concat(
+        lit(s"targetAffinity: $isTargetCol differs within doc id "),
+        $"doc_id".cast(StringType)))).otherwise(lit(true)))
       .select($"doc_id", $"n_grams",
         expr("__sum DIV n_grams").cast(LongType).as("affinity_ppm"))
   }

@@ -1,7 +1,7 @@
 package graft.storage
 
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Segment-layout storage: dim-sorted parquet + a per-file min/max manifest.
@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   * holding per-FILE min/max per indexed column, consulted before Spark ever
   * lists the files.
   *
-  * Scale: the manifest is built from one aggregation over the data grouped
-  * by input_file_name (map-side-combinable, one shuffle of #files rows) and
-  * is tiny (KBs per thousand files); pruning is a driver-side filter over
-  * file entries — exactly how InfoSegment pruning works in the reference.
+  * Scale: the manifest is folded while the segment files are written —
+  * each file's writer accumulates its row count, min/max and bloom bits
+  * (graft.storage.FileStatsBuilder) and the driver joins one small entry
+  * per file, with no re-read of the table. It is tiny (KBs per thousand
+  * files); pruning is a driver-side filter over file entries — exactly how
+  * InfoSegment pruning works in the reference.
   * Writing sorts by the sort columns (TableSchema.java:35 sort.columns) via
   * repartitionByRange + sortWithinPartitions, which is what makes min/max
   * ranges disjoint and the pruning effective.
@@ -60,14 +62,18 @@ object Segments {
   val BloomBits = 1024
   val BloomK = 4
 
-  /** JVM twin of graft.functions.Ops.md5Long (first 60 bits of md5 as a
-    * non-negative long) — bloom probes must hash identically on the build
-    * side (Spark executors) and the check side (driver pruning). */
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** First 60 bits of md5 as a non-negative long (graft.functions.Ops.md5Long
+    * computes the same in Spark SQL) — the bloom hash, on the build side
+    * (the segment writer's fold) and the check side (driver pruning). */
   private[graft] def md5LongJvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = d.take(8).map("%02x".format(_)).mkString // 16 hex chars, use 15
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    val d = md5.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(i) & 0xff); i += 1 }
+    v >>> 4
   }
 
   private[graft] def bloomPositions(v: String): Seq[Int] =
@@ -115,7 +121,7 @@ object Segments {
     }
   }
 
-  /** Write `df` as a dim-sorted segmented table and build its manifest.
+  /** Write `df` as a dim-sorted segmented table with its manifest.
     * `numSegments` controls file count (→ one range partition each). */
   def write(df: DataFrame, dir: String, sortCols: Seq[String],
       indexedCols: Seq[String], numSegments: Int = 8,
@@ -140,154 +146,78 @@ object Segments {
     val withBlooms = bloomCols.foldLeft(base)((w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
       .option("orc.bloom.filter.columns", bloomCols.mkString(","))
-    withBlooms.format(format).save(dir)
-    buildManifest(df.sparkSession, dir, indexedCols, format, bloomCols, ngramCols)
+    save(withBlooms, dir, format, indexedCols, bloomCols, ngramCols)
   }
 
-  /** Z-order (Morton) interleave of `quantized` — each a `bits`-bit long —
-    * into one locality key: bit i of column j lands at position i·n + j, so
-    * a range predicate on ANY of the columns maps to runs of the z space.
-    * Pure bit arithmetic, fully codegen'd. */
-  private def interleave(quantized: Seq[Column], bits: Int): Column =
-    (0 until bits).flatMap { i =>
-      quantized.zipWithIndex.map { case (q, j) =>
-        shiftleft(shiftrightunsigned(q, i).bitwiseAND(lit(1L)),
-          i * quantized.size + j)
-      }
-    }.reduce(_ + _)
-
-  /** [[write]] with a multi-column Z-ORDER layout instead of a lexicographic
-    * dim sort: rows are clustered by the Morton interleave of the (affinely
-    * `bits`-bit-quantized) `zCols`, so per-file min/max manifests stay
-    * selective on EVERY z column at once — a box predicate
-    * (`a BETWEEN … AND b BETWEEN …`) prunes files on both dimensions, where
-    * a lexicographic sort is selective only on its leading column (the
-    * reference rough-indexes every column per pack for the same reason,
-    * SURVEY.md §4.2; Z-ordering is the layout that makes plain min/max act
-    * like that multi-column index).
-    *
-    * The quantization ranges come from one min/max pass (2·|zCols| driver
-    * values — bounded like AQE stats). Quantization only shapes the LAYOUT:
-    * reads stay exact whatever `bits` is. `zCols` must be numeric (or
-    * castable to double); |zCols|·bits ≤ 62. */
-  def writeZOrdered(df: DataFrame, dir: String, zCols: Seq[String],
-      numSegments: Int = 8, bits: Int = 16,
-      rowGroupBytes: Long = 8L << 20, format: String = "parquet",
-      bloomCols: Seq[String] = Nil, ngramCols: Seq[String] = Nil): Unit = {
-    require(zCols.size >= 2, "z-ordering needs at least two columns")
-    require(zCols.size * bits <= 62, s"${zCols.size} cols × $bits bits exceeds a long")
-    val mmCols = zCols.flatMap(c => Seq(min(col(c).cast("double")),
-      max(col(c).cast("double"))))
-    val mm = df.agg(mmCols.head, mmCols.tail: _*).head()
-    val top = (1L << bits) - 1
-    val quantized = zCols.zipWithIndex.map { case (c, j) =>
-      val (lo, hi) = (mm.getDouble(2 * j), mm.getDouble(2 * j + 1))
-      if (hi > lo)
-        floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * lit(top.toDouble))
-          .cast("long")
-      else lit(0L)
+  /** Save through the segment writer ([[SegmentWriter]]), which folds each
+    * file's manifest entry as the file's rows are written, then assemble
+    * `dir`'s manifest from the committed entries. One write job, no
+    * re-read. */
+  private[graft] def save(w: DataFrameWriter[Row], dir: String, format: String,
+      indexedCols: Seq[String], bloomCols: Seq[String], ngramCols: Seq[String]): Unit = {
+    val spark = SparkSession.active
+    w.format(SegmentWriter.formatClass(format))
+      .options(SegmentWriter.options(spark, indexedCols, bloomCols, ngramCols))
+      .save(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = fs.listStatus(root)
+    val byName = listed.map(s => s.getPath.getName -> s).toMap
+    val sidecars = listed.filter(_.getPath.getName.startsWith(SegmentWriter.SidecarPrefix))
+    val entries = sidecars.flatMap { s =>
+      byName.get(s.getPath.getName.stripPrefix(SegmentWriter.SidecarPrefix))
+        .map(data => fileUri(data) -> readTextFile(s.getPath.toString))
     }
-    val sorted = df.withColumn("__z", interleave(quantized, bits))
-      .repartitionByRange(numSegments, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-    val base = sorted.write.mode("overwrite")
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .option("orc.stripe.size", rowGroupBytes.toString)
-    val withBlooms = bloomCols.foldLeft(base)((w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      .option("orc.bloom.filter.columns", bloomCols.mkString(","))
-    withBlooms.format(format).save(dir)
-    // index every z column: the layout makes each one's per-file min/max
-    // tight, which is the whole point
-    buildManifest(df.sparkSession, dir, zCols, format, bloomCols, ngramCols)
+    writeManifest(dir, format, entries.toSeq)
+    sidecars.foreach(s => fs.delete(s.getPath, false))
   }
 
-  /** Build/refresh the manifest: per-file row count + min/max per column,
-    * plus a 1024-bit equality bloom for each column in `bloomCols` and an
-    * 8192-bit character-trigram bloom (substring-LIKE pruning) for each
-    * column in `ngramCols`. Offline maintenance op: one map-side-combinable
-    * aggregation over the table for stats, plus one distinct+aggregate per
-    * bloom/ngram column. */
+  /** A data file's path as Spark's file listing (and `input_file_name`)
+    * spells it. */
+  private def fileUri(s: org.apache.hadoop.fs.FileStatus): String = s.getPath.toUri.toString
+
+  /** `entries` are (file, [[FileStatsBuilder.entryBody]]); written in file
+    * order. */
+  private def writeManifest(dir: String, format: String, entries: Seq[(String, String)]): Unit = {
+    import FileStatsBuilder.jq
+    val files = entries.sortBy(_._1).map { case (f, body) => s"""{"file":${jq(f)},$body}""" }
+    writeTextFile(s"$dir/$ManifestFile",
+      s"""{"version":$ManifestVersion,"format":${jq(format)},"files":${files.mkString("[", ",", "]")}}""")
+  }
+
+  /** Build/refresh the manifest of a directory written elsewhere (a
+    * partitioned snapshot, a plain Parquet/ORC dir): per-file row count +
+    * min/max per column, plus a 1024-bit equality bloom for each column in
+    * `bloomCols` and an 8192-bit character-trigram bloom (substring-LIKE
+    * pruning) for each column in `ngramCols`. The same [[FileStatsBuilder]]
+    * the segment writer uses, folded over the files in one map-only job;
+    * partial folds of a file split across tasks merge on the driver. */
   def buildManifest(spark: SparkSession, dir: String, indexedCols: Seq[String],
       format: String = "parquet", bloomCols: Seq[String] = Nil,
       ngramCols: Seq[String] = Nil): Unit = {
+    val cols = (indexedCols ++ bloomCols ++ ngramCols).distinct
     val df = spark.read.format(format).load(dir)
-    val aggs = count(lit(1)).as("__rows") +:
-      indexedCols.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"__min_$c"),
-        max(col(c)).cast("string").as(s"__max_$c")))
-    val stats = df.groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-    // per (file, bloomCol): the set bit positions, computed distributed with
-    // the SAME hash family as the driver-side check (md5Long("b<i>:"+v))
-    import graft.functions.Ops.md5Long
-    val blooms: Map[(String, String), String] = bloomCols.flatMap { c =>
-      df.select(input_file_name().as("__file"), col(c).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .select(col("__file"), explode(array((0 until BloomK).map(i =>
-          pmod(md5Long(concat(lit(s"b$i:"), col("v"))), lit(BloomBits.toLong))): _*)).as("pos"))
-        .groupBy("__file").agg(collect_set(col("pos")).as("ps"))
-        .collect()
-        .map { r =>
-          val bytes = new Array[Byte](BloomBits / 8)
-          r.getAs[Seq[Long]]("ps").foreach { p =>
-            bytes(p.toInt / 8) = (bytes(p.toInt / 8) | (1 << (p.toInt % 8))).toByte
-          }
-          (r.getString(0), c) -> bytes.map("%02x".format(_)).mkString
+      .select(input_file_name() +: cols.map(col): _*)
+    val schema = df.schema
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val folds = org.apache.spark.sql.graft.Bridge.internalRows(df).mapPartitions { rows =>
+      val byFile = scala.collection.mutable.LinkedHashMap.empty[String, FileStatsBuilder]
+      var file: org.apache.spark.unsafe.types.UTF8String = null
+      var fold: FileStatsBuilder = null
+      rows.foreach { r =>
+        if (file == null || r.getUTF8String(0) != file) {
+          file = r.getUTF8String(0).copy()
+          fold = byFile.getOrElseUpdate(file.toString,
+            new FileStatsBuilder(schema, indexedCols, bloomCols, ngramCols, tz))
         }
-    }.toMap
-    // per (file, ngramCol): bit positions of every distinct code-point
-    // trigram in the column, same hash family as the driver-side check
-    // (md5Long("c<i>:"+tri)). transform/sequence are interpreted, not
-    // codegen'd — acceptable: this is the offline manifest build, not a
-    // query path.
-    val ngrams: Map[(String, String), String] = ngramCols.flatMap { c =>
-      df.select(input_file_name().as("__file"), col(c).cast("string").as("v"))
-        .filter(col("v").isNotNull && length(col("v")) >= NgramN)
-        .select(col("__file"), explode(expr(
-          s"transform(sequence(1, length(v) - ${NgramN - 1}), i -> substring(v, i, $NgramN))")).as("tri"))
-        .distinct()
-        .select(col("__file"), explode(array((0 until NgramK).map(i =>
-          pmod(md5Long(concat(lit(s"c$i:"), col("tri"))), lit(NgramBits.toLong))): _*)).as("pos"))
-        .groupBy("__file").agg(collect_set(col("pos")).as("ps"))
-        .collect()
-        .map { r =>
-          val bytes = new Array[Byte](NgramBits / 8)
-          r.getAs[Seq[Long]]("ps").foreach { p =>
-            bytes(p.toInt / 8) = (bytes(p.toInt / 8) | (1 << (p.toInt % 8))).toByte
-          }
-          (r.getString(0), c) -> bytes.map("%02x".format(_)).mkString
-        }
-    }.toMap
-    def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    // absent stats (all-null column in this file) → JSON null, NOT the string
-    // "null" — the two must stay distinguishable for string columns whose
-    // real min/max is the literal text "null"
-    def jv(s: String) = if (s == null) "null" else jq(s)
-    val entries = stats.map { r =>
-      val file = r.getAs[String]("__file")
-      val statCols = indexedCols.map { c =>
-        s"${jq(c)}:{" +
-          s""""min":${jv(r.getAs[String](s"__min_$c"))},""" +
-          s""""max":${jv(r.getAs[String](s"__max_$c"))}}"""
+        fold.add(r)
       }
-      val bloomColsJson = bloomCols.flatMap(c =>
-        blooms.get((file, c)).map(hex => s"${jq(c)}:${jq(hex)}"))
-      val bloomPart =
-        if (bloomColsJson.isEmpty) "" else s""","blooms":{${bloomColsJson.mkString(",")}}"""
-      // a file absent from the ngram aggregate has no value long enough to
-      // contain a trigram — an all-zero bloom is exact there (any >=3-char
-      // needle prunes it), not merely conservative
-      val zeroHex = "00" * (NgramBits / 8)
-      val ngramColsJson = ngramCols.map(c =>
-        s"${jq(c)}:${jq(ngrams.getOrElse((file, c), zeroHex))}")
-      val ngramPart =
-        if (ngramColsJson.isEmpty) "" else s""","ngrams":{${ngramColsJson.mkString(",")}}"""
-      s"""{"file":${jq(file)},"rows":${r.getAs[Long]("__rows")},"stats":{${statCols.mkString(",")}}$bloomPart$ngramPart}"""
-    }.mkString("[", ",", "]")
-    writeTextFile(s"$dir/$ManifestFile",
-      s"""{"version":$ManifestVersion,"format":${jq(format)},"files":$entries}""")
+      byFile.iterator
+    }.collect()
+    val merged = folds.groupBy(_._1).map { case (f, parts) =>
+      f -> parts.map(_._2).reduce(_ merge _).entryBody
+    }
+    writeManifest(dir, format, merged.toSeq)
   }
 
   // Manifest IO goes through the Hadoop FileSystem API, not java.nio: the

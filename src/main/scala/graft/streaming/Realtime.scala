@@ -419,21 +419,22 @@ object Realtime {
     * batch `Segments.write` table gets — the reference's realtime segments
     * build their full indices on dump (rt/RealtimeSegment.java:215-308), so
     * a table must not lose pruning power by having arrived via the realtime
-    * path. Cost: one distinct+aggregate per bloom/ngram column per
-    * compaction generation (budget note in SCALE.md). */
+    * path. The generation's files go through the segment writer, which
+    * folds each file's manifest entry as its rows are written: no job
+    * beyond the merge write (budget note in SCALE.md). */
   def compact(spark: SparkSession, tableDir: String, r: RollupSpec,
       indexedCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       ngramCols: Seq[String] = Nil): String = {
     import org.apache.hadoop.fs.{FileContext, Options, Path}
     val parts = spark.read.parquet(s"$tableDir/batch=*")
     val gen = s"$tableDir/compacted-${System.currentTimeMillis()}"
-    mergeRollups(parts, r)
+    val w = mergeRollups(parts, r)
       .repartition(spark.sessionState.conf.numShufflePartitions, r.dims.map(col): _*)
       .sortWithinPartitions(r.dims.map(col): _*)
-      .write.mode("overwrite").parquet(gen)
+      .write.mode("overwrite")
     if (indexedCols.nonEmpty || bloomCols.nonEmpty || ngramCols.nonEmpty)
-      graft.storage.Segments.buildManifest(spark, gen, indexedCols,
-        bloomCols = bloomCols, ngramCols = ngramCols)
+      graft.storage.Segments.save(w, gen, "parquet", indexedCols, bloomCols, ngramCols)
+    else w.parquet(gen)
     // `current` pointer swap through the Hadoop FS API so it works on
     // HDFS/cloud stores like the reference's segment upload
     // (SegmentUploader.java); FileContext.rename(OVERWRITE) is the

@@ -37,4 +37,10 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A DataFrame's rows in Spark's internal form (classic `toRdd`): the
+    * values a file writer's `OutputWriter` receives. */
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
 }

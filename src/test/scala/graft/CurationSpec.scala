@@ -381,6 +381,22 @@ class CurationSpec extends AnyFunSuite {
     assert(again == score)
   }
 
+  test("targetAffinity fails loudly when isTarget differs within a doc id") {
+    val s = spark
+    import s.implicits._
+    // doc 3 arrives twice with conflicting flags and disjoint grams, so no
+    // (doc, bucket) group sees both flags: only the per-doc check can
+    val docs = Seq((1L, "ta tb tc ta", 1), (2L, "xa xb xc xa", 0),
+      (3L, "ta tb tc tb", 1), (3L, "xa xb xc xb", 0)).toDF("id", "body", "is_tgt")
+    val e = intercept[Exception](Curation.targetAffinity(docs, "id", "body", "is_tgt",
+      n = 2, buckets = 4096).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("is_tgt differs within doc id 3")), e)
+    // a doc-constant flag still scores
+    assert(Curation.targetAffinity(docs.filter(!($"id" === 3L && $"is_tgt" === 0)),
+      "id", "body", "is_tgt", n = 2, buckets = 4096).count() == 3)
+  }
+
   test("rankAndShard equals the single-window formulation under ties and any partitioning") {
     val s = spark
     import s.implicits._

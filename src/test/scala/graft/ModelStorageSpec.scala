@@ -221,46 +221,6 @@ class ModelStorageSpec extends AnyFunSuite {
     assert(index.lastKept == 0)
   }
 
-  test("z-ordered layout prunes box predicates on BOTH dimensions") {
-    import graft.plans.ManifestFileIndex
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-zorder").toString
-    // two independent uniform dims: a lexicographic sort on x leaves every
-    // file's y-range spanning the whole domain, so a y-constraint prunes
-    // nothing there — the z-order layout must prune on both
-    val rnd = new scala.util.Random(54)
-    val df = (0 until 4096).map { i =>
-      (i.toLong, rnd.nextInt(10000).toLong, rnd.nextInt(10000).toLong)
-    }.toDF("id", "x", "y")
-    Segments.write(df, s"$base/lex", sortCols = Seq("x"),
-      indexedCols = Seq("x", "y"), numSegments = 16)
-    Segments.writeZOrdered(df, s"$base/z", zCols = Seq("x", "y"),
-      numSegments = 16)
-
-    // weakly selective on the lex leading dim (x: half the domain), highly
-    // selective on the trailing one (y: 10%) — the shape where a leading-
-    // column sort is useless and only a multi-dim layout prunes
-    val box = col("x").between(0L, 4999L) && col("y").between(7000L, 7999L)
-    val want = df.filter(box).select($"id").as[Long].collect().sorted.toSeq
-
-    val (zRead, zIdx) = ManifestFileIndex.readWithIndex(spark, s"$base/z")
-    val got = zRead.filter(box).select($"id").as[Long].collect().sorted.toSeq
-    assert(got == want, "z-ordered read must return exactly the box rows")
-    val zKept = zIdx.lastKept
-
-    val (lexRead, lexIdx) = ManifestFileIndex.readWithIndex(spark, s"$base/lex")
-    assert(lexRead.filter(box).count() == want.size)
-    val lexKept = lexIdx.lastKept
-
-    // the lex sort prunes on x only (half the files survive x, all survive
-    // y); z-order must beat it by pruning on y too, and must prune at all
-    assert(zKept < 16, s"z layout pruned nothing ($zKept of 16)")
-    assert(zKept < lexKept,
-      s"z layout kept $zKept files, lexicographic kept $lexKept — no 2-D gain")
-    // unfiltered read stays complete
-    assert(zRead.count() == 4096)
-  }
-
   test("bloom manifest prunes string-equality probes min/max cannot") {
     import graft.plans.ManifestFileIndex
     import spark.implicits._
@@ -387,6 +347,101 @@ class ModelStorageSpec extends AnyFunSuite {
     val got = Segments.prunedRead(spark, dir, Seq(r))
       .filter(col("l_orderkey") <= 100L).count()
     assert(got == li.filter(col("l_orderkey") <= 100L).count())
+  }
+
+  /** The data files of a segment dir and the writer's leftover sidecars. */
+  private def listing(dir: String): (Seq[String], Seq[String]) = {
+    val names = new java.io.File(dir).list().toSeq
+    (names.filterNot(n => n.startsWith("_") || n.startsWith(".")),
+      names.filter(_.startsWith("_graft_entry.")))
+  }
+
+  test("segment writer folds the manifest aggregates compute (parquet + orc)") {
+    import spark.implicits._
+    // strings that order differently as UTF-8 bytes and as UTF-16 units
+    // (U+E000–U+FFFF against supplementary-plane), a double, a timestamp
+    // stringified under a non-UTC zone, nulls, and an indexed column that
+    // is all null in the first file (ids < 200 cover its range partition)
+    val words = Seq("a\uE000b", "a\uD83D\uDE00b", "\uFFFFzz", "x\uD800\uDC00yy",
+      "plain", "ab", "null")
+    val df = (0 until 400).map { i =>
+      (i.toLong,
+        if (i % 9 == 0) null else words(i % words.size) + (i % 5),
+        if (i < 200) None else Some(i * 0.25 - 70.5),
+        new java.sql.Timestamp(1700000000000L + i * 3600000L))
+    }.toDF("id", "s", "d", "ts")
+    val cols = Seq("id", "s", "d", "ts")
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try Seq("parquet", "orc").foreach { format =>
+      val dir = Files.createTempDirectory(s"graft-fold-$format").toString + "/t"
+      Segments.write(df, dir, sortCols = Seq("id"), indexedCols = cols,
+        numSegments = 4, format = format, bloomCols = Seq("s", "d"), ngramCols = Seq("s"))
+      val (data, sidecars) = listing(dir)
+      assert(sidecars.isEmpty, s"$format: sidecars left behind: $sidecars")
+
+      val back = spark.read.format(format).load(dir).withColumn("f", input_file_name())
+      val aggs = count(lit(1)).as("rows") +: cols.flatMap(c =>
+        Seq(min(col(c)).cast("string").as(s"min_$c"), max(col(c)).cast("string").as(s"max_$c")))
+      val want = back.groupBy($"f").agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => r.getAs[String]("f") -> r).toMap
+      def bits(n: Int, ps: Iterable[Int]): String = {
+        val b = new Array[Byte](n / 8)
+        ps.foreach(p => b(p / 8) = (b(p / 8) | (1 << (p % 8))).toByte)
+        b.map(x => f"$x%02x").mkString
+      }
+      def distinctStr(c: String): Map[String, Seq[String]] =
+        back.select($"f", col(c).cast("string")).where(col(c).isNotNull).distinct()
+          .collect().toSeq.groupBy(_.getString(0)).map { case (f, rs) => f -> rs.map(_.getString(1)) }
+      val sVals = distinctStr("s")
+      val dVals = distinctStr("d")
+
+      val m = Segments.readManifest(dir)
+      assert(m.map(_.file).sorted == want.keys.toSeq.sorted, s"$format: file spelling")
+      assert(m.size == data.size && m.size >= 3)
+      assert(m.exists(_.stats("d") == (None, None)), s"$format: an all-null file")
+      m.foreach { fs =>
+        val r = want(fs.file)
+        assert(fs.rows == r.getAs[Long]("rows"))
+        cols.foreach(c => assert(fs.stats(c) ==
+          (Option(r.getAs[String](s"min_$c")), Option(r.getAs[String](s"max_$c"))),
+          s"$format ${fs.file} $c"))
+        assert(fs.blooms.get("s") == sVals.get(fs.file).map(vs =>
+          bits(Segments.BloomBits, vs.flatMap(Segments.bloomPositions))))
+        assert(fs.blooms.get("d") == dVals.get(fs.file).map(vs =>
+          bits(Segments.BloomBits, vs.flatMap(Segments.bloomPositions))))
+        assert(fs.ngrams("s") == bits(Segments.NgramBits, sVals.getOrElse(fs.file, Nil)
+          .flatMap(Segments.cpTrigrams).flatMap(Segments.ngramPositions)))
+      }
+      // the fold over the written files gives the same manifest, byte for byte
+      val written = Segments.readTextFile(s"$dir/${Segments.ManifestFile}")
+      Segments.buildManifest(spark, dir, cols, format, Seq("s", "d"), Seq("s"))
+      assert(Segments.readTextFile(s"$dir/${Segments.ManifestFile}") == written)
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
+
+  test("Segments.write with blooms and trigrams runs no job after its write") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-jobs").toString + "/t"
+    val df = spark.range(2000).select($"id", concat(lit("user-"), ($"id" % 97).cast("string")).as("u"))
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        execs.add(String.valueOf(js.properties.getProperty("spark.sql.execution.id")))
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Segments.write(df, dir, sortCols = Seq("id"), indexedCols = Seq("id", "u"),
+        numSegments = 4, bloomCols = Seq("u"), ngramCols = Seq("u"))
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val ids = execs.asScala.toSeq
+    // every job belongs to the write's one SQL execution: the manifest is
+    // folded by the writer, never re-read
+    assert(ids.nonEmpty && ids.distinct.size == 1, s"job execution ids: $ids")
+    assert(Segments.readManifest(dir).map(_.rows).sum == 2000)
   }
 
   test("segment write sorts by dims and manifest prunes file scans") {

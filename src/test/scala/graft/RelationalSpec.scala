@@ -4,7 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = Graft.session("local[4]", "graft-test", Some(4))
+  lazy val spark: SparkSession = {
+    val s = Graft.session("local[4]", "graft-test", Some(4))
+    // Spark's INFO lines (hundreds of thousands per run) bury test output
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -304,9 +304,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("compaction carries equality + substring-LIKE blooms into the manifest") {
     // a table that arrived via the realtime path must prune like a batch
-    // Segments.write table: compact() threads bloomCols/ngramCols through
-    // buildManifest (reference: realtime dumps build their full indices,
-    // rt/RealtimeSegment.java:215-308)
+    // Segments.write table: compact() writes its generation through the
+    // segment writer, which folds the blooms as it writes (reference:
+    // realtime dumps build their full indices, rt/RealtimeSegment.java:215-308)
     import spark.implicits._
     import graft.storage.Segments
     val dir = Files.createTempDirectory("graft-rt-idx").toString
@@ -346,6 +346,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(Segments.prunedRead(spark, gen,
       Seq(Segments.Equals("dim", "alpha-page", numeric = false)))
       .where($"dim" === "alpha-page").count() == 1)
+  }
+
+  test("compaction writes its manifest in the merge write and leaves no sidecar") {
+    import spark.implicits._
+    import graft.storage.Segments
+    val dir = Files.createTempDirectory("graft-rt-fold").toString
+    val r = RollupSpec(Seq("dim"), Seq("v" -> Sum), "ev_id")
+    (0 until 3).foreach { b =>
+      (0 until 40).map(i => (b * 100L + i, s"page-${(i * 7 + b) % 23}", i * 0.5))
+        .toDF("ev_id", "dim", "v").transform(Realtime.rollupBatch(_, r))
+        .write.parquet(s"$dir/batch=$b")
+    }
+    val gen = Realtime.compact(spark, dir, r, indexedCols = Seq("dim", "v"),
+      bloomCols = Seq("dim"), ngramCols = Seq("dim"))
+    val names = new java.io.File(gen).list().toSeq
+    assert(!names.exists(_.startsWith("_graft_entry.")), s"sidecars left: $names")
+    assert(Segments.readManifest(gen).map(_.rows).sum == 23)
+    // the writer's fold equals a fold over the committed files, byte for byte
+    val written = Segments.readTextFile(s"$gen/${Segments.ManifestFile}")
+    Segments.buildManifest(spark, gen, Seq("dim", "v"), "parquet", Seq("dim"), Seq("dim"))
+    assert(Segments.readTextFile(s"$gen/${Segments.ManifestFile}") == written)
   }
 
   test("merge of per-batch rollups equals one-shot rollup over all rows") {
