@@ -62,18 +62,14 @@ object Segments {
   val BloomBits = 1024
   val BloomK = 4
 
-  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
-
   /** First 60 bits of md5 as a non-negative long (graft.functions.Ops.md5Long
     * computes the same in Spark SQL) — the bloom hash, on the build side
     * (the segment writer's fold) and the check side (driver pruning). */
   private[graft] def md5LongJvm(s: String): Long = {
-    val d = md5.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xff); i += 1 }
-    v >>> 4
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val hex = d.take(8).map("%02x".format(_)).mkString // 16 hex chars, use 15
+    java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
   private[graft] def bloomPositions(v: String): Seq[Int] =
@@ -146,16 +142,17 @@ object Segments {
     val withBlooms = bloomCols.foldLeft(base)((w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
       .option("orc.bloom.filter.columns", bloomCols.mkString(","))
-    save(withBlooms, dir, format, indexedCols, bloomCols, ngramCols)
+    save(df.sparkSession, withBlooms, dir, format, indexedCols, bloomCols, ngramCols)
   }
 
   /** Save through the segment writer ([[SegmentWriter]]), which folds each
     * file's manifest entry as the file's rows are written, then assemble
     * `dir`'s manifest from the committed entries. One write job, no
-    * re-read. */
-  private[graft] def save(w: DataFrameWriter[Row], dir: String, format: String,
-      indexedCols: Seq[String], bloomCols: Seq[String], ngramCols: Seq[String]): Unit = {
-    val spark = SparkSession.active
+    * re-read. `spark` is the session `w`'s DataFrame belongs to: its time
+    * zone spells the timestamp stats. */
+  private[graft] def save(spark: SparkSession, w: DataFrameWriter[Row], dir: String,
+      format: String, indexedCols: Seq[String], bloomCols: Seq[String],
+      ngramCols: Seq[String]): Unit = {
     w.format(SegmentWriter.formatClass(format))
       .options(SegmentWriter.options(spark, indexedCols, bloomCols, ngramCols))
       .save(dir)

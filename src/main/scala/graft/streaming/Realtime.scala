@@ -433,7 +433,7 @@ object Realtime {
       .sortWithinPartitions(r.dims.map(col): _*)
       .write.mode("overwrite")
     if (indexedCols.nonEmpty || bloomCols.nonEmpty || ngramCols.nonEmpty)
-      graft.storage.Segments.save(w, gen, "parquet", indexedCols, bloomCols, ngramCols)
+      graft.storage.Segments.save(spark, w, gen, "parquet", indexedCols, bloomCols, ngramCols)
     else w.parquet(gen)
     // `current` pointer swap through the Hadoop FS API so it works on
     // HDFS/cloud stores like the reference's segment upload

@@ -420,6 +420,17 @@ class ModelStorageSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
+  test("Segments.write spells timestamp stats in its DataFrame's session time zone") {
+    // a session that is not the active one, with its own zone
+    val other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    val df = other.range(3).select(timestamp_seconds(col("id") + 1700000000L).as("ts"))
+    val dir = Files.createTempDirectory("graft-tz").toString + "/t"
+    Segments.write(df, dir, sortCols = Seq("ts"), indexedCols = Seq("ts"), numSegments = 1)
+    assert(Segments.readManifest(dir).map(_.stats("ts")) ==
+      Seq((Some("2023-11-15 07:13:20"), Some("2023-11-15 07:13:22"))))
+  }
+
   test("Segments.write with blooms and trigrams runs no job after its write") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-jobs").toString + "/t"
