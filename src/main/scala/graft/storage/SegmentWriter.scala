@@ -64,8 +64,7 @@ private[storage] object SegmentWriter {
       new OutputWriter {
         override def write(row: InternalRow): Unit = { out.write(row); fold.add(row) }
         override def path(): String = out.path()
-        // an empty file gets no manifest entry, as when the stats were
-        // aggregated per input file
+        // an empty file gets no manifest entry: it has no rows to prune
         override def close(): Unit = {
           out.close()
           if (fold.rowCount > 0) {
