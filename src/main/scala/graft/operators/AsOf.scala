@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * window pass.
   *
   * At 100 TB: one shuffle of left+right on the key columns; skewed keys are
-  * the caller's salting decision (operators.Skew) since as-of semantics need
-  * per-key time order. q48 is this operator instantiated on events.
+  * the caller's salting decision since as-of semantics need per-key time
+  * order. q48 is this operator instantiated on events.
   */
 object AsOf {
 

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.Ops.md5Long
-
 /** Public deduplication / corpus-curation API over ANY DataFrame — the
   * library surface a pipeline calls (the `qNN` entries in SparkEntry are
   * these operators instantiated on the test corpus). Callers name their id
@@ -167,15 +165,6 @@ object Dedup {
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 4,
       threshold: Double = 0.8, maxDocFreq: Option[Long] = None): DataFrame =
     Text.jaccardPairsFrom(shingles(df, idCol, textCol, n, maxDocFreq), threshold)
-
-  /** Asymmetric near-duplicate pairs by shingle CONTAINMENT
-    * (shared / min-size): an excerpt or quoted passage scores ~1 against
-    * its source even when the size mismatch keeps [[jaccardPairs]] low.
-    * Output: (doc_a, doc_b, shared, containment), doc_a < doc_b. */
-  def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, threshold: Double = 0.9,
-      maxDocFreq: Option[Long] = None): DataFrame =
-    Text.containmentPairsFrom(shingles(df, idCol, textCol, n, maxDocFreq), threshold)
 
   /** Near-dup clusters: connected components over the pair graph, joined
     * back so every document gets a canonical id.
@@ -493,30 +482,6 @@ object Dedup {
       .filter($"score" >= minScore)
   }
 
-  /** Keep-best selection: within each cluster keep the row with the highest
-    * `quality` (ties → lowest id). Output: input ids + (canonical_id, keep).
-    * `clustersDf` is the output of [[clusters]] (or any (doc_id,
-    * canonical_id) frame) — pass it in, computed once. */
-  def keepBest(df: DataFrame, idCol: String, qualityCol: String,
-      clustersDf: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    // winner per cluster via a combiner-friendly min_by aggregate (ordering
-    // struct = (-quality, doc_id): max quality, ties -> lowest id) + join
-    // back on canonical_id. A row_number window partitioned by canonical_id
-    // would put an entire boilerplate mega-cluster in one task; the groupBy
-    // shrinks it map-side and AQE splits the skewed join-back.
-    val joined = df
-      .select(col(idCol).cast(LongType).as("doc_id"), col(qualityCol))
-      .join(clustersDf.select($"doc_id", $"canonical_id"), "doc_id")
-    val winners = joined.groupBy($"canonical_id")
-      .agg(min_by($"doc_id",
-        struct(negate(col(qualityCol)).as("q"), $"doc_id".as("i"))).as("__best"))
-    joined.join(winners, "canonical_id")
-      .withColumn("keep", when($"doc_id" === $"__best", 1).otherwise(0))
-      .select($"doc_id", col(qualityCol), $"canonical_id", $"keep")
-  }
-
   /** MinHash+LSH near-dup candidates: k md5-derived min-hashes over the
     * n-gram shingles, `bands` LSH bands (equi-join on the band key — the
     * scalable candidate path), est_sim = matching-signature fraction.
@@ -585,14 +550,6 @@ object Dedup {
   def simhash(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 16): DataFrame =
     Text.simhashFrom(normalized(df, idCol, textCol), bits)
-
-  /** Deterministic content-hash sampling: keeps rows whose
-    * md5(tag + text) mod 100 < keepPct. Map-only; membership is a pure
-    * function of content (reproducible subsets at any scale). Vary `tag`
-    * to draw independent samples. */
-  def hashSample(df: DataFrame, textCol: String, keepPct: Int,
-      tag: String = "smp:"): DataFrame =
-    df.filter(md5Long(concat(lit(tag), col(textCol))) % 100L < keepPct)
 
   // ---------------------------------------------------------------------
   // Repeated-span (ExactSubstr-style) dedup family. Token-level exact

@@ -1124,28 +1124,6 @@ object Events {
       .agg(countDistinct(col(entityCol)).as("uniques"))
   }
 
-  /** Approximate [[rollingDistinct]] — the documented scale path for wide
-    * windows: same distinct-collapse and map-side day fan-out, but the
-    * per-day count is HLL++ (`approx_count_distinct`, mergeable sketch
-    * state) instead of the exact two-phase expand. Use when windowDays ×
-    * daily-actives makes exact distinct counting the bottleneck; `rsd`
-    * is the HLL relative standard deviation (default 5%). Output:
-    * (day, uniques_est). */
-  def rollingDistinctApprox(df: DataFrame, entityCol: String, dayCol: String,
-      windowDays: Int, rsd: Double = 0.05): DataFrame = {
-    require(windowDays >= 1, "windowDays must be positive")
-    val ud = df.select(col(dayCol).cast(LongType).as("__day"), col(entityCol))
-      .distinct()
-    val maxDay = ud.agg(max(col("__day")).as("__maxd"))
-    ud.select(explode(expr(
-        s"sequence(__day, __day + ${windowDays - 1})")).as("day"),
-        col(entityCol))
-      .crossJoin(broadcast(maxDay))
-      .filter(col("day") <= col("__maxd"))
-      .groupBy(col("day"))
-      .agg(approx_count_distinct(col(entityCol), rsd).as("uniques_est"))
-  }
-
   // q119 — rolling 7-day distinct active users per day.
   private def q119(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -611,36 +611,6 @@ object Graphs {
       .groupBy($"id").agg(count(lit(1)).as("deg"))
   }
 
-  /** [[kCore]] run to convergence: strips rounds until one removes no
-    * node (the true k-core), up to `maxRounds` as a runaway bound. Each
-    * round costs one `count()` on the checkpointed (hence cheap) edge
-    * frame to detect the fixpoint — the driver-side loop the fixed-round
-    * form's scaladoc promises; rounds needed ≤ graph diameter. */
-  def kCoreConverged(edgesDf: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxRounds: Int = 100): DataFrame = {
-    require(maxRounds >= 1, "maxRounds must be positive")
-    val s = edgesDf.sparkSession
-    import s.implicits._
-    var e = edgesDf
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter($"x" =!= $"y").distinct().localCheckpoint()
-    var prev = -1L
-    var n = e.count()
-    var r = 0
-    while (n != prev && r < maxRounds) {
-      val deg = e.select($"x".as("id")).union(e.select($"y".as("id")))
-        .groupBy($"id").agg(count(lit(1)).as("deg"))
-      val kept = deg.filter($"deg" >= k).select($"id")
-      e = e.join(kept.withColumnRenamed("id", "x"), Seq("x"), "left_semi")
-        .join(kept.withColumnRenamed("id", "y"), Seq("y"), "left_semi")
-        .select($"x", $"y").localCheckpoint()
-      prev = n; n = e.count(); r += 1
-    }
-    e.select($"x".as("id")).union(e.select($"y".as("id")))
-      .groupBy($"id").agg(count(lit(1)).as("deg"))
-  }
-
   // q125 — the 30-core of the purchase graph after 3 stripping rounds
   // (median degree ≈ 33, so the cut does real work). A core build is a
   // build-once artifact — memoized, bench reports it cold.

@@ -278,20 +278,4 @@ object Multimodal {
       }
     }.toDF("doc_id", "frame_no", "frame_bytes")
   }
-
-  /** REAL frame sampling for MJPEG/AVI payloads: walk the container and
-    * emit every k-th actual JPEG frame (frame_no = its position in the
-    * stream), ready for [[ImageIoDecoder]]-style per-frame featurization
-    * or thumbnailing downstream. Map-only like [[sampleFrames]]; a
-    * non-AVI payload fails loudly rather than yielding fake frames. */
-  def sampleAviFrames(media: Dataset[MediaRow], every: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    require(every >= 1, "every must be >= 1")
-    media.flatMap { r =>
-      if (r.kind != "video") Iterator.empty
-      else MjpegAviDecoder.aviFrames(r.payload).iterator.zipWithIndex.collect {
-        case (jpeg, i) if i % every == 0 => (r.doc_id, i, jpeg)
-      }
-    }.toDF("doc_id", "frame_no", "frame_bytes")
-  }
 }

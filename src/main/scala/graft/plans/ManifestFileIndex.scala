@@ -1,12 +1,10 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,12 +23,11 @@ import graft.storage.Segments
   * listing genuinely cannot be expressed with public composable operators.
   *
   * Filter translation is conservative (tri-state RSValue semantics): any
-  * expression shape we do not recognize simply prunes nothing.
+  * expression shape we do not recognize simply prunes nothing. `toRange`
+  * is the one place a scan's filters become manifest checks; the index is
+  * opened only through `format("graft")` (graft.sources.GraftSource).
   */
 class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
-
-  /** observability: how many files the last listFiles call kept (tests/UI). */
-  @volatile var lastKept: Int = -1
 
   /** Manifest entries for files that actually exist on disk — exactly the
     * set an unfiltered listFiles would scan (for ManifestAggregates). */
@@ -67,13 +64,13 @@ class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
   }
 
   /** literal → the string space the manifest stats were cast into. */
-  private def litStr(l: Literal): Option[(String, Boolean)] = l.value match {
-    case null => None
-    case u: UTF8String => Some((u.toString, false))
-    case n @ (_: Byte | _: Short | _: Int | _: Long | _: Float | _: Double) =>
-      Some((n.toString, true))
-    case d: Decimal => Some((d.toString, true))
-    case _ => None // timestamps/dates etc.: conservatively no pruning
+  private def litStr(l: Literal): Option[(String, Boolean)] = (l.value, l.dataType) match {
+    case (null, _) => None
+    case (u: UTF8String, _) => Some((u.toString, false))
+    case (n, _: NumericType) => Some((n.toString, true))
+    // a date or timestamp literal holds Int days / Long micros, not the
+    // string its manifest stats were cast to: conservatively no pruning
+    case _ => None
   }
 
   /** Maximal literal runs of a LIKE pattern (between unescaped `%`/`_`),
@@ -173,33 +170,6 @@ class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
     val ranges = dataFilters.flatMap(toRange)
     val kept = manifest.filter(fs => ranges.forall(_.mayMatch(fs)))
       .flatMap(fs => statuses.get(normalize(fs.file)))
-    lastKept = kept.size
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
-  }
-}
-
-object ManifestFileIndex {
-  /** Open a segmented table through its manifest: filters on indexed columns
-    * skip whole files inside the scan node. */
-  def read(spark: SparkSession, dir: String): DataFrame = readWithIndex(spark, dir)._1
-
-  /** As `read`, also returning the index for pruning introspection. The
-    * file format (parquet/orc) comes from the manifest. */
-  def readWithIndex(spark: SparkSession, dir: String): (DataFrame, ManifestFileIndex) = {
-    val fmt = Segments.manifestFormat(dir)
-    val fileFormat = fmt match {
-      case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-      case _ => new ParquetFileFormat
-    }
-    val schema = spark.read.format(fmt).load(dir).schema
-    val index = new ManifestFileIndex(spark, dir)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = fileFormat,
-      options = Map.empty)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    (Bridge.ofRows(spark, LogicalRelation(relation, isStreaming = false)), index)
   }
 }

@@ -11,12 +11,12 @@ import graft.storage.Segments
 
 /** `spark.read.format("graft").load(segmentDir)` — the named-format entry
   * the reference exposes as `format("indexr")` (SURVEY.md §3.2,
-  * indexr-spark IndexRFileFormat registration). Resolves to the same
-  * manifest-backed relation as `ManifestFileIndex.read`: per-file min/max +
-  * bloom + trigram pruning happens inside Catalyst file listing, then the
-  * native parquet/orc reader takes over (column pruning, row-group stats,
-  * row-group blooms). Registered via META-INF/services, so pure-SQL
-  * sessions reach it with nothing but the format name — e.g.
+  * indexr-spark IndexRFileFormat registration), and the one way to open a
+  * segment directory: the relation is backed by a [[ManifestFileIndex]], so
+  * per-file min/max + bloom + trigram pruning happens inside Catalyst file
+  * listing, then the native parquet/orc reader takes over (column pruning,
+  * row-group stats, row-group blooms). Registered via META-INF/services, so
+  * pure-SQL sessions reach it with nothing but the format name — e.g.
   * `CREATE TABLE t USING graft LOCATION '/data/t'`. */
 class GraftSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "graft"

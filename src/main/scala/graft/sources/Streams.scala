@@ -1,12 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Streaming source constructors — the Fetcher family (SURVEY.md §2.C:
   * Kafka08Fetcher / CsvFetcher / ConsoleFetcher / TestFetcher) re-expressed
-  * as Structured Streaming sources. Every one yields a streaming DataFrame
-  * with a single string `json` column (or typed columns for csv), which
+  * as Structured Streaming sources. The kafka and file sources yield a
+  * streaming DataFrame with a single string `json` column, which
   * graft.streaming.Realtime.decode/start consume uniformly.
   */
 object Streams {
@@ -40,11 +39,6 @@ object Streams {
     * appended file becomes part of the next micro-batch). */
   def jsonFiles(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.text(dir).toDF("json")
-
-  /** Directory of csv files with a declared schema. */
-  def csvFiles(spark: SparkSession, dir: String, schema: StructType,
-      header: Boolean = false): DataFrame =
-    spark.readStream.schema(schema).option("header", header.toString).csv(dir)
 
   /** Synthetic rate source (ConsoleFetcher/TestFetcher stand-in). */
   def rate(spark: SparkSession, rowsPerSecond: Int = 100): DataFrame =

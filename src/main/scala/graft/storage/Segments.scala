@@ -294,38 +294,47 @@ object Segments {
     def mayMatch(fs: FileStats): Boolean
   }
 
-  /** A closed-interval predicate on one column, for manifest pruning.
-    * Values compare as the column's native type via the `numeric` flag
-    * (numeric → BigDecimal compare, else lexicographic — matching how the
-    * stats were stringified). */
-  case class Range(colName: String, lo: Option[String], hi: Option[String],
-      numeric: Boolean = true) extends FilePred {
-    private def cmp(a: String, b: String): Int =
-      if (numeric) BigDecimal(a).compare(BigDecimal(b)) else utf8Cmp(a, b)
-    def mayMatch(fs: FileStats): Boolean = fs.stats.get(colName) match {
-      case Some((Some(mn), Some(mx))) =>
-        lo.forall(l => cmp(mx, l) >= 0) && hi.forall(h => cmp(mn, h) <= 0)
-      case _ => true // unindexed column or no stats (all-null) → can't prune
-    }
+  /** Stats compare as the column's native type via the `numeric` flag
+    * (numeric → BigDecimal compare, else UTF-8 byte order — matching how
+    * the stats were stringified). */
+  private def cmp(a: String, b: String, numeric: Boolean): Int =
+    if (numeric) BigDecimal(a).compare(BigDecimal(b)) else utf8Cmp(a, b)
+
+  /** May the file hold a value of `colName` in [lo, hi]? */
+  private def inRange(fs: FileStats, colName: String, lo: Option[String],
+      hi: Option[String], numeric: Boolean): Boolean = fs.stats.get(colName) match {
+    case Some((Some(mn), Some(mx))) =>
+      lo.forall(l => cmp(mx, l, numeric) >= 0) && hi.forall(h => cmp(mn, h, numeric) <= 0)
+    case _ => true // unindexed column or no stats (all-null) → can't prune
   }
 
-  /** Point-lookup predicate `col = value`: min/max range check AND (when the
-    * manifest carries a bloom for the column) the k-bit bloom membership
-    * test — the file-level form of the reference's string-hash equality
-    * rough check (ExtIndex_Str_Hash / CMap isValue). */
+  /** Min/max range check AND (when the manifest carries a bloom for the
+    * column) the k-bit bloom membership test. */
+  private def mayEqual(fs: FileStats, colName: String, value: String,
+      numeric: Boolean): Boolean =
+    inRange(fs, colName, Some(value), Some(value), numeric) &&
+      fs.blooms.get(colName).forall(hex => bloomMightContain(hex, value))
+
+  /** A closed-interval predicate on one column, for manifest pruning. */
+  case class Range(colName: String, lo: Option[String], hi: Option[String],
+      numeric: Boolean = true) extends FilePred {
+    def mayMatch(fs: FileStats): Boolean = inRange(fs, colName, lo, hi, numeric)
+  }
+
+  /** Point-lookup predicate `col = value` — the file-level form of the
+    * reference's string-hash equality rough check (ExtIndex_Str_Hash /
+    * CMap isValue). */
   case class Equals(colName: String, value: String, numeric: Boolean = true)
       extends FilePred {
-    def mayMatch(fs: FileStats): Boolean =
-      Range(colName, Some(value), Some(value), numeric).mayMatch(fs) &&
-        fs.blooms.get(colName).forall(hex => bloomMightContain(hex, value))
+    def mayMatch(fs: FileStats): Boolean = mayEqual(fs, colName, value, numeric)
   }
 
   /** Membership predicate `col IN (values)`: the file may match if ANY value
-    * may be present (per-value Equals, bloom-aware). */
+    * may be present (per-value equality check, bloom-aware). */
   case class InSet(colName: String, values: Seq[String], numeric: Boolean = true)
       extends FilePred {
     def mayMatch(fs: FileStats): Boolean =
-      values.exists(v => Equals(colName, v, numeric).mayMatch(fs))
+      values.exists(mayEqual(fs, colName, _, numeric))
   }
 
   /** Boolean algebra over rough checks — the reference's And/Or/Not tri-state
@@ -345,9 +354,7 @@ object Segments {
       extends FilePred {
     def mayMatch(fs: FileStats): Boolean = fs.stats.get(colName) match {
       case Some((Some(mn), Some(mx))) =>
-        def eq(a: String, b: String) =
-          (if (numeric) BigDecimal(a).compare(BigDecimal(b)) else utf8Cmp(a, b)) == 0
-        !(eq(mn, mx) && eq(mn, value))
+        !(cmp(mn, mx, numeric) == 0 && cmp(mn, value, numeric) == 0)
       case _ => true
     }
   }
@@ -374,22 +381,6 @@ object Segments {
           utf8Cmp(mx.take(prefix.length), prefix) >= 0
       case _ => true
     }
-  }
-
-  /** Read only the files whose manifest interval intersects all ranges —
-    * segment-level pruning before Parquet sees a footer. */
-  def prunedRead(spark: SparkSession, dir: String, ranges: Seq[FilePred]): DataFrame = {
-    val manifest = readManifest(dir)
-    val fmt = manifestFormat(dir)
-    val keep = manifest.filter(fs => ranges.forall(_.mayMatch(fs))).map(_.file)
-    if (keep.isEmpty) spark.read.format(fmt).load(dir).limit(0)
-    else spark.read.format(fmt).load(keep: _*)
-  }
-
-  /** How many files the manifest would keep (for tests/introspection). */
-  def prunedFileCount(dir: String, ranges: Seq[FilePred]): (Int, Int) = {
-    val manifest = readManifest(dir)
-    (manifest.count(fs => ranges.forall(_.mayMatch(fs))), manifest.size)
   }
 
   /** Global (min, max) of a NUMERIC indexed column from the manifest alone —

@@ -59,12 +59,11 @@ object Realtime {
   /** Parse the reference-shaped realtime config JSON
     * (RealtimeConfig.java:50-78, TagSetting.java:7-15) into an
     * [[IngestSpec]] over a table spec — the config-as-text surface: a
-    * table's schema JSON plus this realtime JSON (plus, for SQL-only
-    * clients, the generated [[ingestSql]] text) fully describe the
-    * pipeline with no code. Recognized keys: `dims`, `metrics`
-    * `[{name, agg}]`, `name.alias` (column → event-field alias; events
-    * parse under alias names and rename to column names, the reference's
-    * direction), `tag.setting` (`tag.field`, `accept.tags`),
+    * table's schema JSON plus this realtime JSON fully describe the
+    * pipeline that [[decode]] and [[rollupBatch]] run. Recognized keys:
+    * `dims`, `metrics` `[{name, agg}]`, `name.alias` (column → event-field
+    * alias; events parse under alias names and rename to column names, the
+    * reference's direction), `tag.setting` (`tag.field`, `accept.tags`),
     * `ignoreStrategy` (`IGNORE_EMPTY`). Missing-field defaults come from
     * the table spec's column defaults (reference no-null +
     * number.empty.as.zero semantics), keyed by the parse-time (alias)
@@ -138,8 +137,8 @@ object Realtime {
 
   /** Parse-time metric columns for the IGNORE_EMPTY filter: every parsed
     * field that is neither a rollup dim nor the tag field, with dims and
-    * tag mapped into parse-time names (shared by decode and decodeSql so
-    * the SQL twin cannot drift). */
+    * tag mapped into parse-time names (shared by decode and ingestStats so
+    * the counters cannot drift from what decode keeps). */
   private def ignoreEmptyMetricCols(spec: IngestSpec): Seq[String] = {
     val dimParse = spec.rollup.toSeq.flatMap(_.dims)
       .map(parseName(spec, _)).toSet
@@ -282,113 +281,6 @@ object Realtime {
     df.groupBy(r.dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  // ---------------------------------------------------------------------
-  // Pure-SQL ingest surface — the reference configures realtime ingest as
-  // TEXT (table spec JSON with SQL-ish agg schema, TableSchema.java:17-69),
-  // so a client that can only submit SQL strings must be able to run the
-  // same decode→rollup pipeline. The generators below emit Spark SQL from
-  // the SAME IngestSpec/RollupSpec objects that drive decode/rollupBatch;
-  // run the text with spark.sql over a registered view — including a
-  // STREAMING temp view (spark.sql on a streaming view yields a streaming
-  // frame; hand it to writeStream). Equivalence with the programmatic path
-  // is spec-asserted in StreamingSpec, batch and stream.
-  // ---------------------------------------------------------------------
-
-  private def sqlLit(v: Any): String = v match {
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case d: Double => s"CAST($d AS DOUBLE)"
-    case f: Float => s"CAST($f AS DOUBLE)"
-    case other => String.valueOf(other)
-  }
-
-  /** Decode SQL for `spec` over the view `rawView`: from_json against the
-    * spec schema's DDL, defaults as coalesce, tag filter and ignore-empty
-    * as WHERE, aliases as AS — the SQL twin of [[decode]]. `passthrough`
-    * lists raw-view columns to carry alongside the parsed ones (decode's
-    * `col("*")`; pure SQL must name them). */
-  def decodeSql(spec: IngestSpec, jsonCol: String, rawView: String,
-      passthrough: Seq[String] = Nil): String = {
-    val ddl = (spec.schema.toDDL + s", `$CorruptCol` STRING")
-      .replace("'", "''")
-    // defaulted value of a parsed column (pre-alias name), as decode
-    // computes it — the tag filter and ignore-empty run on these too
-    def valOf(c: String): String = spec.defaults.get(c) match {
-      case Some(v) => s"coalesce(__p.`$c`, ${sqlLit(v)})"
-      case None => s"__p.`$c`"
-    }
-    val outCols = passthrough.map(c => s"`$c`") ++ spec.schema.fieldNames.map {
-      c => s"${valOf(c)} AS `${spec.aliases.getOrElse(c, c)}`"
-    }
-    val tagCond = spec.tagField.filter(_ => spec.acceptTags.nonEmpty).map { tf =>
-      val tags = spec.acceptTags.toSeq.sorted.map(sqlLit).mkString(", ")
-      s"size(array_intersect(split(${valOf(parseName(spec, tf))}, ','), array($tags))) > 0"
-    }
-    val emptyCond =
-      if (!spec.ignoreEmpty) None
-      else {
-        val metricCols = ignoreEmptyMetricCols(spec)
-        if (metricCols.isEmpty) None
-        else Some(metricCols.map(c => s"${valOf(c)} IS NOT NULL")
-          .mkString("(", " OR ", ")"))
-      }
-    // failed parses drop here too (decode parity: null struct or the
-    // corrupt-record marker set)
-    val conds =
-      Seq("__p IS NOT NULL", s"__p.`$CorruptCol` IS NULL") ++
-        tagCond.toSeq ++ emptyCond.toSeq
-    val where = "\nWHERE " + conds.mkString(" AND ")
-    s"""SELECT ${outCols.mkString(",\n  ")}
-       |FROM (SELECT *, from_json(`$jsonCol`, '$ddl',
-       |  map('columnNameOfCorruptRecord', '$CorruptCol')) AS __p
-       |  FROM $rawView)$where""".stripMargin
-  }
-
-  /** Rollup SQL for `r` over `from` (a view name or parenthesized
-    * subquery) — the SQL twin of [[rollupBatch]]: float/double SUMs travel
-    * as DECIMAL(30,6), FIRST/LAST are MIN_BY/MAX_BY plus their arrival
-    * anchors. `schema` resolves metric types (pass the decoded frame's
-    * schema, as rollupBatch reads it off the frame). */
-  def rollupSql(r: RollupSpec, schema: StructType, from: String): String = {
-    def isFp(m: String): Boolean = schema.find(_.name == m)
-      .exists(f => f.dataType == DoubleType || f.dataType == FloatType)
-    val aggs = r.metrics.flatMap {
-      case (m, Sum) if isFp(m) =>
-        Seq(s"SUM(CAST(`$m` AS DECIMAL(30,6))) AS `$m`")
-      case (m, Sum) => Seq(s"SUM(`$m`) AS `$m`")
-      case (m, Cnt) => Seq(s"COUNT(`$m`) AS `$m`")
-      case (m, Min) => Seq(s"MIN(`$m`) AS `$m`")
-      case (m, Max) => Seq(s"MAX(`$m`) AS `$m`")
-      case (m, First) => Seq(
-        s"MIN_BY(`$m`, `${r.arrival}`) AS `$m`",
-        s"MIN(`${r.arrival}`) AS `${arrCol(m, First)}`")
-      case (m, Last) => Seq(
-        s"MAX_BY(`$m`, `${r.arrival}`) AS `$m`",
-        s"MAX(`${r.arrival}`) AS `${arrCol(m, Last)}`")
-    }
-    val dims = r.dims.map(c => s"`$c`")
-    s"""SELECT ${(dims ++ aggs).mkString(",\n  ")}
-       |FROM $from
-       |GROUP BY ${dims.mkString(", ")}""".stripMargin
-  }
-
-  /** The full SQL-text ingest: decode, then the spec's rollup if any —
-    * submit the returned string via spark.sql against a (batch or
-    * streaming) view registered as `rawView`. Rollup metrics must be
-    * parsed columns here (a code-level pipeline can enrich between the
-    * stages; a pure-SQL client edits the generated text instead). */
-  def ingestSql(spec: IngestSpec, jsonCol: String, rawView: String,
-      passthrough: Seq[String] = Nil): String = {
-    val dec = decodeSql(spec, jsonCol, rawView, passthrough)
-    spec.rollup match {
-      case None => dec
-      case Some(r) =>
-        // resolve metric types post-alias, as the decoded frame carries them
-        val decoded = StructType(spec.schema.fields.map(f =>
-          f.copy(name = spec.aliases.getOrElse(f.name, f.name))))
-        rollupSql(r, decoded, s"(\n$dec\n)")
-    }
-  }
-
   /** Start the ingest query: decode → per-batch rollup → dim-sorted parquet
     * append into `tableDir/batch=<id>` (idempotent per batchId — replayed
     * batches overwrite their own dir, commitlog-replay parity). */
@@ -421,7 +313,9 @@ object Realtime {
     * a table must not lose pruning power by having arrived via the realtime
     * path. The generation's files go through the segment writer, which
     * folds each file's manifest entry as its rows are written: no job
-    * beyond the merge write (budget note in SCALE.md). */
+    * beyond the merge write (budget note in SCALE.md). After the swap every
+    * older `compacted-*` generation is deleted except the one `current`
+    * named before it, so a table holds at most two merged copies. */
   def compact(spark: SparkSession, tableDir: String, r: RollupSpec,
       indexedCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       ngramCols: Seq[String] = Nil): String = {
@@ -435,6 +329,10 @@ object Realtime {
     if (indexedCols.nonEmpty || bloomCols.nonEmpty || ngramCols.nonEmpty)
       graft.storage.Segments.save(spark, w, gen, "parquet", indexedCols, bloomCols, ngramCols)
     else w.parquet(gen)
+    val current = new Path(s"$tableDir/current")
+    val fs = current.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val previous = Option.when(fs.exists(current))(
+      new Path(graft.storage.Segments.readTextFile(current.toString)).getName)
     // `current` pointer swap through the Hadoop FS API so it works on
     // HDFS/cloud stores like the reference's segment upload
     // (SegmentUploader.java); FileContext.rename(OVERWRITE) is the
@@ -443,159 +341,17 @@ object Realtime {
     graft.storage.Segments.writeTextFile(tmp.toString, gen)
     val fc = FileContext.getFileContext(tmp.toUri,
       spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(s"$tableDir/current"), Options.Rename.OVERWRITE)
+    fc.rename(tmp, current, Options.Rename.OVERWRITE)
+    // every older generation is a full copy of the table: keep only the new
+    // one and the one `current` named before the swap, which a reader that
+    // resolved `current` just before it may still be scanning
+    val keep = Set(new Path(gen).getName) ++ previous
+    fs.listStatus(new Path(tableDir))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("compacted-") &&
+        !keep.contains(st.getPath.getName))
+      .foreach(st => fs.delete(st.getPath, true))
     gen
   }
-
-  /** Streaming exact dedup: drop events whose key was already seen, with
-    * state bounded by the watermark (the streaming face of the exact-dedup
-    * operator; at 100 TB/day the TTL bounds state to the late-data horizon).
-    * Uses Spark's native `dropDuplicatesWithinWatermark` — idiomatic
-    * preference over hand-rolled mapGroupsWithState for this shape. */
-  def dedupStream(df: DataFrame, eventTimeCol: String, ttl: String,
-      keys: String*): DataFrame =
-    df.withWatermark(eventTimeCol, ttl)
-      .dropDuplicatesWithinWatermark(keys.toSeq)
-
-  /** Custom keyed streaming state (`KeyValueGroupedDataset
-    * .flatMapGroupsWithState`): a running (total, count) per key maintained
-    * across micro-batches, emitted on every update — the escape hatch for
-    * state machines the built-in aggregations can't express. State is one
-    * small tuple per key (100 TB-friendly: bounded by key cardinality, not
-    * event volume). */
-  def runningTotals(df: DataFrame, keyCol: String, valCol: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(keyCol).cast(StringType).as("k"), col(valCol).cast(DoubleType).as("v"))
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Double, Long), (String, Double, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (k: String, rows: Iterator[(String, Double)], state: GroupState[(Double, Long)]) =>
-          val (pt, pn) = state.getOption.getOrElse((0.0, 0L))
-          var t = pt; var n = pn
-          rows.foreach { r => t += r._2; n += 1 }
-          state.update((t, n))
-          Iterator((k, t, n))
-      }
-      .toDF(keyCol, "total", "n")
-  }
-
-  /** Stream-stream event-time interval join — the two-stream correlation
-    * (impressions ⋈ clicks within an attribution window) the reference's
-    * single-stream ingest cannot express. Inner join on `keyCols` with
-    * `rightTimeCol` ∈ [leftTimeCol, leftTimeCol + maxDelay]; BOTH sides
-    * are watermarked, which is what lets Spark expire buffered state —
-    * the 100 TB requirement: state ∝ the in-flight interval per key, not
-    * stream history. Right-side key columns are coalesced away; both
-    * event-time columns are kept. Inner-join matches emit as soon as
-    * both rows arrive (no watermark wait).
-    *
-    * At scale the join shuffles both streams on the key per micro-batch
-    * and keeps per-key sorted state; size `watermarkDelay` to the real
-    * out-of-orderness and `maxDelay` to the semantic window — state is
-    * proportional to rate × (delay + window). */
-  def joinStreams(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      leftTimeCol: String, rightTimeCol: String,
-      watermarkDelay: String, maxDelay: String,
-      joinType: String = "inner"): DataFrame = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(leftTimeCol != rightTimeCol,
-      "rename one side's event-time column — both are kept in the output")
-    require(Seq("inner", "left_outer", "right_outer").contains(joinType),
-      "joinType must be inner, left_outer or right_outer")
-    val l = left.withWatermark(leftTimeCol, watermarkDelay)
-    val r0 = right.withWatermark(rightTimeCol, watermarkDelay)
-    val r = keyCols.foldLeft(r0)((d, k) => d.withColumnRenamed(k, s"__r_$k"))
-    val cond = keyCols.map(k => col(k) === col(s"__r_$k")).reduce(_ && _) &&
-      col(rightTimeCol) >= col(leftTimeCol) &&
-      col(rightTimeCol) <= col(leftTimeCol) + expr(s"INTERVAL $maxDelay")
-    // OUTER variants: the unmatched side emits null-padded once the
-    // watermark proves no in-interval partner can still arrive — the
-    // impression-with-no-click row an attribution pipeline needs. The
-    // preserved side's key survives the coalesce below either way.
-    val joined = l.join(r, cond, joinType)
-    keyCols.foldLeft(joined)((d, k) =>
-      d.withColumn(k, coalesce(col(k), col(s"__r_$k"))))
-      .drop(keyCols.map(k => s"__r_$k"): _*)
-  }
-
-  /** Streaming drift monitor — the streaming face of
-    * [[graft.operators.Curation.distributionDrift]]: per tumbling
-    * event-time window, the stream's categorical mix is compared to a
-    * STATIC reference mix (`refShares`: (bucket, ref_ppm) — e.g. the
-    * accepted corpus' [[graft.operators.Curation.distributionDrift]]
-    * output, or [[graft.operators.Curation.temperatureShares]] targets),
-    * emitting ONE row per closed window: (window, n_events, tv_ppm) —
-    * the same exact-integer total-variation certificate the batch
-    * operator produces, `1e6` = disjoint mix. Alert on tv_ppm, read the
-    * batch drift table for the why.
-    *
-    * Plan: a (window, bucket) count (stateful agg #1, state bounded by
-    * open windows × #buckets) → broadcast join to the static reference →
-    * a window re-aggregation (stateful agg #2 — the chained
-    * window-aggregation shape Spark supports in append mode) whose
-    * per-window items list is #buckets-bounded, so the TV folds map-side
-    * with integer DIV ppm. Reference buckets absent from a window
-    * contribute their full ref_ppm (the vanished-category alarm), via the
-    * refTotal − matchedRef identity — `refShares` is collected once
-    * (#buckets rows, the mixCorpus convention). Novel stream buckets
-    * carry ref_ppm 0. Windows emit once the watermark closes them. */
-  def driftStream(df: DataFrame, eventTimeCol: String, catCol: String,
-      windowDuration: String, watermarkDelay: String,
-      refShares: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val ref = refShares.select(col("bucket").cast(StringType),
-      col("ref_ppm").cast(LongType)).collect()
-    // fails-LOUDLY contract on the reference mix: a duplicate bucket fans
-    // out the left join (each stream event counted once per duplicate —
-    // n_events AND tv_ppm both wrong), a NULL bucket inflates refTotal but
-    // can never match (permanently reported as vanished mass), a negative
-    // share corrupts the TV fold. None is a valid reference; reject all.
-    require(ref.forall(r => !r.isNullAt(0)),
-      "reference shares contain a NULL bucket")
-    require(ref.forall(r => !r.isNullAt(1) && r.getLong(1) >= 0L),
-      "reference shares contain a NULL or negative ref_ppm")
-    require(ref.map(_.getString(0)).distinct.length == ref.length,
-      "reference shares contain duplicate buckets")
-    val refTotal = ref.map(_.getLong(1)).sum
-    require(refTotal <= 1000000L, s"reference shares sum to $refTotal > 1e6")
-    val refDf = ref.map(r => (r.getString(0), r.getLong(1))).toSeq
-      .toDF("__cat", "ref_ppm")
-    val counts = df
-      .withWatermark(eventTimeCol, watermarkDelay)
-      .groupBy(window(col(eventTimeCol), windowDuration),
-        col(catCol).cast(StringType).as("__cat"))
-      .agg(count(lit(1)).as("__c"))
-    counts
-      .join(broadcast(refDf), Seq("__cat"), "left")
-      .na.fill(0L, Seq("ref_ppm"))
-      .groupBy(window(col("window"), windowDuration).as("window"))
-      .agg(sum($"__c").as("n_events"),
-        collect_list(struct($"__c", $"ref_ppm")).as("__items"))
-      .select($"window", $"n_events",
-        // Σ_matched |stream_ppm − ref_ppm| + (refTotal − Σ_matched ref):
-        // buckets the window never saw still pull their whole ref share
-        (expr("""aggregate(__items, 0L, (acc, x) ->
-             acc + abs(x.__c * 1000000L DIV n_events - x.ref_ppm))""") +
-          (lit(refTotal) -
-            expr("aggregate(__items, 0L, (acc, x) -> acc + x.ref_ppm)")))
-          .as("__tvsum"))
-      .select($"window", $"n_events", expr("__tvsum DIV 2").as("tv_ppm"))
-  }
-
-  /** Event-time session windows (gap-based), streaming form of the batch
-    * sessionization operator (q27): sessions close and emit once the
-    * watermark passes last-event + gap. State per open session only — the
-    * 100 TB-friendly bound (superset of the reference, which has no
-    * windowing). Output carries `session.start` / `session.end`. */
-  def sessionizeStream(df: DataFrame, eventTimeCol: String, gap: String,
-      watermarkDelay: String, keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.withWatermark(eventTimeCol, watermarkDelay)
-      .groupBy(session_window(col(eventTimeCol), gap).as("session") +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
 
   /** Rt2His (Rt2HisOnHive.java:52,200-251 parity): reorganize realtime
     * output into a date-partitioned historical table. The INSERT-OVERWRITE-

@@ -685,13 +685,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val r2 = graft.operators.Graphs.kCore(edges, "a", "b", k = 2, rounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 == Map(1L->3L, 2L->3L, 3L->3L, 4L->3L), s"got $r2")
-    // convergence form reaches the same fixpoint without a round count,
-    // and a k above the max degree strips everything
-    val cv = graft.operators.Graphs.kCoreConverged(edges, "a", "b", k = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cv == r2, s"got $cv")
-    assert(graft.operators.Graphs.kCoreConverged(edges, "a", "b", k = 5)
-      .collect().isEmpty)
   }
 
   // ------------------------------------------- attribution (q124)

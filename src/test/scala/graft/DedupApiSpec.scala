@@ -22,23 +22,6 @@ class DedupApiSpec extends AnyFunSuite {
     (104L, s"$boiler completely different words in this document entirely")
   ).toDF("my_id", "body")
 
-  test("containment catches the excerpt that Jaccard under-scores") {
-    val words = (1 to 40).map(i => s"w$i")
-    val source = words.mkString(" ")              // 40 tokens
-    val excerpt = words.slice(10, 18).mkString(" ") // 8-token quote
-    val docs = Seq((1L, source), (2L, excerpt)).toDF("my_id", "body")
-    val cont = Dedup.containmentPairs(docs, "my_id", "body",
-      threshold = 0.5).collect()
-    assert(cont.length == 1)
-    val r = cont.head
-    // every shingle of the excerpt appears in the source: containment 1.0
-    assert(r.getAs[Long]("doc_a") == 1L && r.getAs[Long]("doc_b") == 2L)
-    assert(r.getAs[Double]("containment") == 1.0, s"got $r")
-    // the symmetric measure on the same pair is far below near-dup range
-    val jac = Dedup.jaccardPairs(docs, "my_id", "body", threshold = 0.0).collect()
-    assert(jac.head.getAs[Double]("jaccard") < 0.2, s"got ${jac.head}")
-  }
-
   test("editDistancePairs: exact distances inside blocks, banded cutoff holds") {
     val rows = Seq(
       (1L, "prefix match aaaa bbbb cccc"),
@@ -155,19 +138,12 @@ class DedupApiSpec extends AnyFunSuite {
     assert(auto < allPairs / 16, s"candidates must be far below all-pairs: $auto")
   }
 
-  test("clusters + keepBest: one winner per cluster, best quality kept") {
-    val cl = Dedup.clusters(docs, "my_id", "body", threshold = 0.5).persist()
-    val byId = cl.collect().map(r =>
+  test("clusters: exact and near dups share a canonical id") {
+    val byId = Dedup.clusters(docs, "my_id", "body", threshold = 0.5).collect().map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[Long]("canonical_id")).toMap
     assert(byId(100L) == byId(101L), "exact dups cluster together")
     assert(byId(102L) == byId(103L), "near dups cluster together")
     assert(byId(104L) == 104L, "unique doc is its own canonical")
-    val withQ = docs.withColumn("q", length($"body"))
-    val kept = Dedup.keepBest(withQ, "my_id", "q", cl)
-      .filter($"keep" === 1).collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(kept.size == 3, s"one winner per cluster, got $kept")
-    assert(kept.contains(104L))
-    assert(kept.contains(100L), "tie on quality -> lowest id wins")
   }
 
   test("minhashPairs and simhash work under caller-named columns") {
@@ -509,18 +485,5 @@ class DedupApiSpec extends AnyFunSuite {
         r.getAs[String]("clean_text")).toMap
     assert(clean == Map(10L -> "x y", 11L -> "c", 12L -> "b c d e"),
       s"got $clean")
-  }
-
-  test("hashSample is deterministic and respects the rate") {
-    val big = spark.range(2000).select($"id".as("k"),
-      concat(lit("doc "), $"id").as("body"))
-    val a = Dedup.hashSample(big, "body", 20).collect().map(_.getLong(0)).toSet
-    val b = Dedup.hashSample(big, "body", 20).collect().map(_.getLong(0)).toSet
-    assert(a == b, "same content -> same sample")
-    assert(math.abs(a.size - 400) < 100, s"~20% of 2000 expected, got ${a.size}")
-    // independent tag draws a different (but overlapping-by-chance) sample
-    val c = Dedup.hashSample(big, "body", 20, tag = "other:").collect()
-      .map(_.getLong(0)).toSet
-    assert(c != a)
   }
 }

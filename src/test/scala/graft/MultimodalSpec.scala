@@ -233,29 +233,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("corrupt AVI"), e.getMessage)
   }
 
-  test("sampleAviFrames emits every k-th real JPEG frame from the container") {
-    import spark.implicits._
-    // 10 frames with per-frame distinct luma so order is observable
-    val frames = (0 until 10).map(i => jpegFrame(16, 16, i * 0x1b1b1b))
-    val avi = writeAvi(frames, 16, 16)
-    val rows = Seq(
-      Multimodal.MediaRow(1L, "video", avi, "en", 1L),
-      Multimodal.MediaRow(2L, "audio", "wav".getBytes, "en", 1L)) // skipped
-    val out = Multimodal.sampleAviFrames(spark.createDataset(rows), every = 3)
-      .collect().sortBy(_.getAs[Int]("frame_no"))
-    assert(out.map(_.getAs[Long]("doc_id")).toSet == Set(1L), "videos only")
-    assert(out.map(_.getAs[Int]("frame_no")).toSeq == Seq(0, 3, 6, 9))
-    // each sampled frame is the actual JPEG at that position: decodable,
-    // right dims, luma increasing with frame_no
-    val lumas = out.map { r =>
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("frame_bytes")))
-      assert(img != null && img.getWidth == 16 && img.getHeight == 16)
-      Multimodal.MjpegAviDecoder.frameMeanLuma(img)
-    }
-    assert(lumas.sliding(2).forall(p => p(0) < p(1)), lumas.mkString(","))
-  }
-
   test("decoded features feed the similarity operators (end-to-end handoff)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

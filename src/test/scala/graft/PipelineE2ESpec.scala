@@ -58,13 +58,13 @@ class PipelineE2ESpec extends AnyFunSuite {
       .select($"doc_id", $"text", $"lang", $"n_tokens")
     assert(curated.count() == 2) // junk doc dropped
 
-    // 4. write sorted segments + manifest, read back through the FileIndex
+    // 4. write sorted segments + manifest, read back through format("graft")
     Segments.write(curated, s"$stage/table", sortCols = Seq("doc_id"),
       indexedCols = Seq("doc_id"), numSegments = 2)
-    val (table, index) = graft.plans.ManifestFileIndex.readWithIndex(spark, s"$stage/table")
-    val hit = table.filter($"doc_id" === 4L).collect()
+    val (hit, kept) = keptFiles(
+      spark.read.format("graft").load(s"$stage/table").filter($"doc_id" === 4L))
     assert(hit.length == 1 && hit.head.getAs[Int]("n_tokens") >= 5)
-    assert(index.lastKept <= 2) // manifest consulted during the scan
+    assert(kept <= 2) // manifest consulted during the scan
   }
 
   test("refresh chain: snapshot diff routes the delta; merged artifact ≡ full rebuild") {

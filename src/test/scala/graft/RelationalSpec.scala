@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
@@ -11,6 +13,24 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `df` with `collect()` and returns its rows together with the
+    * number of files its scans kept: each FileSourceScanExec's `numFiles`
+    * in AQE's final plan, which for a `format("graft")` table is what the
+    * manifest kept. `collect()` because ManifestAggregates answers a bare
+    * unfiltered `count()` from the manifest with no scan. */
+  def keptFiles(df: DataFrame): (Array[Row], Long) = {
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scans = ScanNodes.of(plan)
+    assert(scans.nonEmpty, s"no file scan in the executed plan:\n$plan")
+    (rows, scans.map(_.metrics("numFiles").value).sum)
+  }
+
+  private object ScanNodes extends AdaptiveSparkPlanHelper {
+    def of(plan: SparkPlan): Seq[FileSourceScanExec] =
+      collect(plan) { case s: FileSourceScanExec => s }
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -53,22 +53,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(b.getAs[Long]("cnt") == 0L) // alias applied + default
   }
 
-  test("generated decode SQL equals programmatic decode (pure-SQL surface)") {
-    import spark.implicits._
-    val raw = Seq(
-      """{"ev_id":1,"dim":"a","tag":"keep","v":2.5,"n":1}""",
-      """{"ev_id":2,"dim":"a","tag":"drop","v":9.9,"n":1}""",
-      """{"ev_id":3,"dim":"b","tag":"vip,extra"}""").toDF("json")
-    raw.createOrReplaceTempView("raw_decode_sql")
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      r.getAs[Long]("ev_id") ->
-        ((r.getAs[String]("dim"), r.getAs[Double]("v"), r.getAs[Long]("cnt")))).toMap
-    val viaSql = keyed(
-      spark.sql(Realtime.decodeSql(spec, "json", "raw_decode_sql")).collect())
-    val viaApi = keyed(Realtime.decode(raw, "json", spec).collect())
-    assert(viaSql == viaApi && viaSql.size == 2)
-  }
-
   test("ingestFromJson: the reference-shaped realtime JSON stands up the whole pipeline") {
     import spark.implicits._
     // table spec (schema JSON layer) + realtime config JSON = no code
@@ -125,13 +109,9 @@ class StreamingSpec extends AnyFunSuite {
       """{"tag":"drop","k":2}""",   // ignored_tag
       """{"tag":"keep"}""",         // ignored_empty (k is the only metric)
       """{"tag":"keep","k":5}""").toDF("json") // produced
-    raw.createOrReplaceTempView("raw_malformed")
     val decoded = Realtime.decode(raw, "json", spec2)
       .collect().map(_.getAs[Long]("k")).toSet
     assert(decoded == Set(1L, 5L), s"decode kept $decoded")
-    val viaSql = spark.sql(Realtime.decodeSql(spec2, "json", "raw_malformed"))
-      .collect().map(_.getAs[Long]("k")).toSet
-    assert(viaSql == Set(1L, 5L), s"decodeSql kept $viaSql")
     val st = Realtime.ingestStats(raw, "json", spec2).collect().head
     assert((st.getAs[Long]("consumed"), st.getAs[Long]("produced"),
       st.getAs[Long]("ignored_tag"), st.getAs[Long]("ignored_empty"),
@@ -159,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(none.rollup.isEmpty)
   }
 
-  test("IGNORE_EMPTY classifies an aliased dim as a dim, in decode and decodeSql") {
+  test("IGNORE_EMPTY classifies an aliased dim as a dim in decode") {
     import spark.implicits._
     // column "dim" parses under alias "d"; rollup dims are post-alias
     // names, so the parse-time classification must map them back through
@@ -173,76 +153,9 @@ class StreamingSpec extends AnyFunSuite {
     val raw = Seq(
       """{"d":"a","v":2.5}""",
       """{"d":"b"}""").toDF("json") // all metrics null -> drop
-    raw.createOrReplaceTempView("raw_aliased_dim")
     val viaApi = Realtime.decode(raw, "json", spec)
       .collect().map(_.getAs[String]("dim")).toSet
-    val viaSql = spark.sql(Realtime.decodeSql(spec, "json", "raw_aliased_dim"))
-      .collect().map(_.getAs[String]("dim")).toSet
     assert(viaApi == Set("a"), s"decode kept $viaApi")
-    assert(viaSql == Set("a"), s"decodeSql kept $viaSql")
-  }
-
-  test("decodeSql escapes quotes in defaults and tags") {
-    import spark.implicits._
-    val schema2 = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType),
-      StructField("tag", StringType)))
-    val spec2 = IngestSpec(
-      schema = schema2,
-      defaults = Map("name" -> "o'brien"),
-      tagField = Some("tag"), acceptTags = Set("it's", "ok"))
-    val raw = Seq(
-      """{"id":1,"tag":"it's"}""",
-      """{"id":2,"name":"x","tag":"drop"}""",
-      """{"id":3,"name":"d'arcy","tag":"ok"}""").toDF("json")
-    raw.createOrReplaceTempView("raw_quote_sql")
-    val got = spark.sql(Realtime.decodeSql(spec2, "json", "raw_quote_sql"))
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
-    assert(got == Map(1L -> "o'brien", 3L -> "d'arcy"))
-  }
-
-  test("pure-SQL streaming ingest: decode+rollup SQL over a streaming view = batch rollup") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    // a spec whose rollup uses only parsed columns (the pure-SQL contract);
-    // w -> Last exercises the MAX_BY + arrival-anchor generation
-    val sqlSchema = StructType(Seq(
-      StructField("ev_id", LongType), StructField("dim", StringType),
-      StructField("tag", StringType), StructField("v", DoubleType),
-      StructField("n", LongType), StructField("w", DoubleType)))
-    val sqlSpec = IngestSpec(
-      schema = sqlSchema,
-      defaults = Map("v" -> 0.0, "n" -> 0L),
-      aliases = Map("n" -> "cnt"),
-      tagField = Some("tag"), acceptTags = Set("keep", "vip"),
-      rollup = Some(RollupSpec(dims = Seq("dim"),
-        metrics = Seq("v" -> Sum, "cnt" -> Sum, "w" -> Last),
-        arrival = "ev_id")))
-    val lines = Seq(
-      """{"ev_id":1,"dim":"a","tag":"keep","v":2.5,"n":1,"w":10.0}""",
-      """{"ev_id":2,"dim":"a","tag":"vip","v":1.5,"n":2,"w":20.0}""",
-      """{"ev_id":3,"dim":"a","tag":"drop","v":9.9,"n":9,"w":30.0}""",
-      """{"ev_id":4,"dim":"b","tag":"keep","w":5.0}""")
-    val mem = MemoryStream[String]
-    mem.toDF().toDF("value").createOrReplaceTempView("raw_stream_sql")
-    val q = spark.sql(Realtime.ingestSql(sqlSpec, "value", "raw_stream_sql"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("sqlingest").start()
-    try {
-      mem.addData(lines: _*)
-      q.processAllAvailable()
-      def keyed(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-        r.getAs[String]("dim") -> ((r.getAs[java.math.BigDecimal]("v").toString,
-          r.getAs[Long]("cnt"), r.getAs[Double]("w"),
-          r.getAs[Long](Realtime.arrCol("w", Last))))).toMap
-      val got = keyed(spark.table("sqlingest"))
-      val want = keyed(Realtime.rollupBatch(
-        Realtime.decode(lines.toDF("value"), "value", sqlSpec),
-        sqlSpec.rollup.get))
-      assert(got == want && got.contains("a") && got.contains("b"))
-      // the Last anchor resolved to the latest arrival in dim a
-      assert(got("a")._3 == 20.0 && got("a")._4 == 2L)
-    } finally q.stop()
   }
 
   test("streaming ingest -> batch dumps -> compaction merges rollup state") {
@@ -283,11 +196,13 @@ class StreamingSpec extends AnyFunSuite {
     // the compacted generation is a manifest-indexed segment table: a probe
     // outside the dim range prunes every file, inside keeps the data
     import graft.storage.Segments
-    assert(Segments.readManifest(gen).nonEmpty)
-    assert(Segments.prunedRead(spark, gen,
-      Seq(Segments.Range("dim", Some("zzz"), None, numeric = false))).count() == 0)
-    assert(Segments.prunedRead(spark, gen,
-      Seq(Segments.Range("dim", Some("a"), Some("b"), numeric = false))).count() == 2)
+    val files = Segments.readManifest(gen).size
+    assert(files > 0)
+    val seg = spark.read.format("graft").load(gen)
+    val (outside, keptOutside) = keptFiles(seg.filter(col("dim") >= "zzz"))
+    assert(outside.isEmpty && keptOutside == 0, s"kept $keptOutside of $files files")
+    val (inside, keptInside) = keptFiles(seg.filter(col("dim").between("a", "b")))
+    assert(inside.length == 2 && keptInside == files, s"kept $keptInside of $files files")
     val merged = spark.read.parquet(gen).collect()
       .map(row => row.getAs[String]("dim") -> row).toMap
 
@@ -331,21 +246,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(manifest.size >= 2, "8 dims must spread over >1 compacted file")
     assert(manifest.forall(f => f.blooms.contains("dim") && f.ngrams.contains("dim")),
       "every compacted file must carry the dim blooms")
+    val seg = spark.read.format("graft").load(gen)
     // equality bloom: a value that was never ingested prunes every file
-    assert(Segments.prunedFileCount(gen,
-      Seq(Segments.Equals("dim", "nope-page", numeric = false)))._1 == 0)
+    val (nope, keptNope) = keptFiles(seg.filter($"dim" === "nope-page"))
+    assert(nope.isEmpty && keptNope == 0)
     // substring bloom: an absent trigram prunes every file; a real substring
     // prunes the files not holding it and keeps the matching row
-    assert(Segments.prunedFileCount(gen, Seq(Segments.ContainsPred("dim", "zzz")))._1 == 0)
-    val (keptGamma, total) =
-      Segments.prunedFileCount(gen, Seq(Segments.ContainsPred("dim", "gamma")))
-    assert(keptGamma < total, "files without the 'gamma' trigrams must prune")
-    assert(Segments.prunedRead(spark, gen,
-      Seq(Segments.ContainsPred("dim", "gamma")))
-      .where($"dim" === "gamma-page").count() == 1)
-    assert(Segments.prunedRead(spark, gen,
-      Seq(Segments.Equals("dim", "alpha-page", numeric = false)))
-      .where($"dim" === "alpha-page").count() == 1)
+    val (zzz, keptZzz) = keptFiles(seg.filter($"dim".contains("zzz")))
+    assert(zzz.isEmpty && keptZzz == 0)
+    val (gamma, keptGamma) = keptFiles(seg.filter($"dim".contains("gamma")))
+    assert(keptGamma < manifest.size, "files without the 'gamma' trigrams must prune")
+    assert(gamma.map(_.getAs[String]("dim")).toSeq == Seq("gamma-page"))
+    assert(seg.filter($"dim" === "alpha-page").count() == 1)
   }
 
   test("compaction writes its manifest in the merge write and leaves no sidecar") {
@@ -367,6 +279,25 @@ class StreamingSpec extends AnyFunSuite {
     val written = Segments.readTextFile(s"$gen/${Segments.ManifestFile}")
     Segments.buildManifest(spark, gen, Seq("dim", "v"), "parquet", Seq("dim"), Seq("dim"))
     assert(Segments.readTextFile(s"$gen/${Segments.ManifestFile}") == written)
+  }
+
+  test("compaction keeps only the current and the previous generation") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-rt-gens").toString
+    val r = RollupSpec(Seq("dim"), Seq("v" -> Sum), "ev_id")
+    val gens = (0 until 4).map { b =>
+      Seq((b.toLong, s"d$b", b + 1.0)).toDF("ev_id", "dim", "v")
+        .transform(Realtime.rollupBatch(_, r)).write.parquet(s"$dir/batch=$b")
+      Realtime.compact(spark, dir, r, indexedCols = Seq("dim"))
+    }
+    def name(p: String) = new java.io.File(p).getName
+    val left = new java.io.File(dir).list().filter(_.startsWith("compacted-")).sorted.toSeq
+    assert(left == gens.takeRight(2).map(name).sorted, s"generations left: $left")
+    val current = Files.readString(java.nio.file.Paths.get(s"$dir/current"))
+    assert(current == gens.last)
+    val rows = spark.read.format("graft").load(current).collect()
+      .map(row => row.getAs[String]("dim") -> row.getAs[java.math.BigDecimal]("v").doubleValue)
+    assert(rows.toMap == Map("d0" -> 1.0, "d1" -> 2.0, "d2" -> 3.0, "d3" -> 4.0))
   }
 
   test("merge of per-batch rollups equals one-shot rollup over all rows") {
@@ -403,73 +334,6 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.table("enrich_out").collect()
       .map(r => (r.getLong(0), r.getString(2))).toSet
     assert(got == Set((1L, "gold"), (2L, "basic"), (3L, "unknown")), s"got $got")
-  }
-
-  test("stream-stream interval join: clicks attribute to impressions within the window") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    val imps = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val clicks = MemoryStream[(java.sql.Timestamp, Long)]
-    val out = Realtime.joinStreams(
-      imps.toDF().toDF("its", "uid", "ad"),
-      clicks.toDF().toDF("cts", "uid"),
-      keyCols = Seq("uid"), leftTimeCol = "its", rightTimeCol = "cts",
-      watermarkDelay = "1 minute", maxDelay = "10 minutes")
-    val q = out.select($"uid", $"ad", $"its", $"cts")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj_out").start()
-    // u1 clicks 5 min after the impression (in-window, ARRIVES in a later
-    // micro-batch — the cross-batch buffering the stateful join exists
-    // for); u2 clicks 20 min later (out of window); u3 clicks with no
-    // impression; u4 clicks BEFORE its impression
-    imps.addData((t(0), 1L, "adA"), (t(0), 2L, "adB"), (t(30), 4L, "adD"))
-    q.processAllAvailable()
-    clicks.addData((t(5), 1L), (t(20), 2L), (t(10), 3L), (t(25), 4L))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ssj_out").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == Set((1L, "adA")), s"got $got")
-  }
-
-  test("stream-stream LEFT OUTER join emits unmatched impressions after the watermark") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    val imps = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val clicks = MemoryStream[(java.sql.Timestamp, Long)]
-    val out = Realtime.joinStreams(
-      imps.toDF().toDF("its", "uid", "ad"),
-      clicks.toDF().toDF("cts", "uid"),
-      keyCols = Seq("uid"), leftTimeCol = "its", rightTimeCol = "cts",
-      watermarkDelay = "1 minute", maxDelay = "10 minutes",
-      joinType = "left_outer")
-    val q = out.select($"uid", $"ad", $"cts")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj_outer_out").start()
-    // u1 matches; u2 never clicks — must emit null-padded, but only after
-    // the watermark passes its interval end (t0 + 10min join window + 1min
-    // delay), which the t(40) click advances
-    imps.addData((t(0), 1L, "adA"), (t(0), 2L, "adB"))
-    q.processAllAvailable()
-    clicks.addData((t(5), 1L))
-    q.processAllAvailable()
-    val before = spark.table("ssj_outer_out").collect()
-      .map(r => (r.getLong(0), Option(r.get(2)).isDefined)).toSet
-    assert(before == Set((1L, true)), s"u2 must NOT emit yet: ${before.toSeq}")
-    // the join's watermark is the MIN across both inputs — advance BOTH
-    // sides past u2's interval end (t0 + 10min window + 1min delay)
-    clicks.addData((t(40), 99L))
-    imps.addData((t(40), 98L, "adX"))
-    q.processAllAvailable()
-    // state eviction runs on the NEXT batch after the watermark advances
-    clicks.addData((t(41), 99L))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ssj_outer_out").collect()
-      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)).isDefined)).toSet
-    assert(got == Set((1L, "adA", true), (2L, "adB", false)), s"got $got")
   }
 
   test("Misra-Gries sketch aggregates a stream incrementally (complete mode)") {
@@ -523,24 +387,6 @@ class StreamingSpec extends AnyFunSuite {
       .agg(bk($"h")).head().getSeq[Long](0)
     assert(streamed == batch, s"streamed $streamed vs batch $batch")
     assert(streamed.size == 8 && streamed == streamed.sorted)
-  }
-
-  test("streaming exact dedup drops duplicate keys within the watermark") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val deduped = Realtime.dedupStream(
-      mem.toDF().toDF("ts", "event_id", "v"), "ts", "10 minutes", "event_id")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    mem.addData((t(0), 1L, 1.0), (t(1), 2L, 2.0), (t(2), 1L, 99.0)) // dup id=1
-    q.processAllAvailable()
-    mem.addData((t(3), 1L, 98.0), (t(4), 3L, 3.0)) // dup id=1 again, next batch
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_out").collect().map(_.getAs[Long]("event_id")).sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L), s"got ${ids.toSeq}")
   }
 
   test("streamed incremental minhash dedup equals the all-batch LSH run") {
@@ -626,160 +472,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getAs[Double]("sv"))
     assert(out.contains(3.0), s"first window should emit 1+2=3, got ${out.toSeq}")
     assert(!out.contains(103.0) && !out.contains(100.0), "late event must be dropped")
-  }
-
-  test("streaming session windows close at watermark (gap-based sessionization)") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val agg = Realtime.sessionizeStream(
-      mem.toDF().toDF("ts", "k", "v"),
-      "ts", gap = "5 minutes", watermarkDelay = "10 minutes",
-      keys = Seq("k"), aggs = Seq(sum(col("v")).as("sv"), count(lit(1)).as("n")))
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("sess_out").start()
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    mem.addData((t(0), "a", 1.0), (t(2), "a", 2.0)) // one session (gap < 5m)
-    q.processAllAvailable()
-    mem.addData((t(30), "a", 5.0)) // new session; watermark closes the first
-    q.processAllAvailable()
-    mem.addData((t(50), "a", 1.0)) // closes the 10:30 session
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("sess_out").collect().map { r =>
-      val w = r.getAs[org.apache.spark.sql.Row]("session")
-      (w.getAs[java.sql.Timestamp]("start"), w.getAs[java.sql.Timestamp]("end"),
-        r.getAs[Double]("sv"), r.getAs[Long]("n"))
-    }
-    // first session: events at 10:00 and 10:02 merge (end = last + gap = 10:07)
-    assert(rows.contains((t(0), t(7), 3.0, 2L)), s"got ${rows.toSeq}")
-    // second session: the lone 10:30 event, closed by the 10:50 watermark
-    assert(rows.contains((t(30), t(35), 5.0, 1L)), s"got ${rows.toSeq}")
-  }
-
-  test("driftStream: per-window TV vs a static reference mix, exact ppm") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val ref = Seq(("a", 500000L), ("b", 500000L)).toDF("bucket", "ref_ppm")
-    val drift = Realtime.driftStream(mem.toDF().toDF("ts", "cat"),
-      "ts", "cat", windowDuration = "5 minutes",
-      watermarkDelay = "10 minutes", refShares = ref)
-    val q = drift.writeStream.outputMode("append")
-      .format("memory").queryName("drift_out").start()
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    // window 10:00-05: a×3, b×1, c×2 (c NOVEL) → n=6,
-    // |500000−500000| + |166666−500000| + |333333−0| = 667667… recompute
-    // in the assert from the same integer DIV arithmetic
-    mem.addData((t(0), "a"), (t(1), "a"), (t(2), "a"),
-      (t(3), "b"), (t(0), "c"), (t(4), "c"))
-    q.processAllAvailable()
-    // window 10:30-35: a×2 → b VANISHES: TV = (|1e6−5e5| + 5e5) / 2 = 5e5
-    mem.addData((t(30), "a"), (t(31), "a"))
-    q.processAllAvailable()
-    mem.addData((t(50), "a")) // watermark closes 10:30-35
-    q.processAllAvailable()
-    mem.addData((t(70), "a")) // and one more batch to flush the chain
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("drift_out").collect().map { r =>
-      val w = r.getAs[org.apache.spark.sql.Row]("window")
-      (w.getAs[java.sql.Timestamp]("start"),
-        r.getAs[Long]("n_events"), r.getAs[Long]("tv_ppm"))
-    }.toSet
-    // window 1: matched a |3·1e6 DIV 6 − 5e5| = 0, b |1e6 DIV 6·1 −…|:
-    // 1·1e6 DIV 6 = 166666 → 333334; novel c: 2·1e6 DIV 6 = 333333 → sum
-    // 666667; no vanished ref; TV = 666667 DIV 2 = 333333
-    assert(rows.contains((t(0), 6L, 333333L)), s"got $rows")
-    // window 2: a 1e6 vs 5e5 → 5e5; vanished b ref 5e5 → TV = 500000
-    assert(rows.contains((t(30), 2L, 500000L)), s"got $rows")
-  }
-
-  test("driftStream: duplicate / NULL / negative reference mixes rejected LOUDLY") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val in = mem.toDF().toDF("ts", "cat")
-    def call(ref: org.apache.spark.sql.DataFrame): Unit =
-      Realtime.driftStream(in, "ts", "cat", "5 minutes", "10 minutes", ref)
-    // a duplicate bucket would fan out the left join (each stream event
-    // counted once per duplicate); a NULL bucket inflates refTotal but can
-    // never match; a negative share corrupts the TV fold — all rejected
-    val dup = Seq(("a", 400000L), ("a", 400000L)).toDF("bucket", "ref_ppm")
-    assert(intercept[IllegalArgumentException](call(dup))
-      .getMessage.contains("duplicate"))
-    val nul = Seq((Option.empty[String], 400000L), (Some("b"), 400000L))
-      .toDF("bucket", "ref_ppm")
-    assert(intercept[IllegalArgumentException](call(nul))
-      .getMessage.contains("NULL bucket"))
-    val neg = Seq(("a", -1L), ("b", 400000L)).toDF("bucket", "ref_ppm")
-    assert(intercept[IllegalArgumentException](call(neg))
-      .getMessage.contains("negative"))
-  }
-
-  test("driftStream ≡ batch distributionDrift per window (incl. novel + vanished)") {
-    // the oracle-grade lock: the SAME events through the streaming monitor
-    // and through the batch drift operator window-by-window must certify
-    // identical tv_ppm — the streaming TV identity (matched fold +
-    // refTotal − matchedRef) against the batch full-outer-join formulation
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    // ref mix a 50% / b 30% / c 20%; the batch twin gets the mix as ROWS
-    // in the same exact proportions (10 rows → identical integer ppm)
-    val ref = Seq(("a", 500000L), ("b", 300000L), ("c", 200000L))
-      .toDF("bucket", "ref_ppm")
-    val refRows = (Seq.fill(5)("a") ++ Seq.fill(3)("b") ++ Seq.fill(2)("c"))
-      .toDF("bucket")
-    // W1: a×2 b×1 d×3 (c vanished, d novel); W2: a×4 (b AND c vanished);
-    // W3: d×2 (every ref bucket vanished, only a novel one)
-    val winEvents: Seq[(Int, Seq[String])] = Seq(
-      0 -> Seq("a", "a", "b", "d", "d", "d"),
-      30 -> Seq("a", "a", "a", "a"),
-      50 -> Seq("d", "d"))
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val drift = Realtime.driftStream(mem.toDF().toDF("ts", "cat"),
-      "ts", "cat", windowDuration = "5 minutes",
-      watermarkDelay = "10 minutes", refShares = ref)
-    val q = drift.writeStream.outputMode("append")
-      .format("memory").queryName("drift_eq_out").start()
-    winEvents.foreach { case (m, cats) =>
-      mem.addData(cats.map(c => (t(m), c)): _*)
-      q.processAllAvailable()
-    }
-    mem.addData((t(90), "a")); q.processAllAvailable() // close W3
-    mem.addData((t(120), "a")); q.processAllAvailable() // flush the chain
-    q.stop()
-    val streamed = spark.table("drift_eq_out").collect().map { r =>
-      val w = r.getAs[org.apache.spark.sql.Row]("window")
-      w.getAs[java.sql.Timestamp]("start") -> r.getAs[Long]("tv_ppm")
-    }.toMap
-    winEvents.foreach { case (m, cats) =>
-      val batchTv = graft.operators.Curation
-        .distributionDrift(refRows, cats.toDF("bucket"), "bucket")
-        .agg(expr("sum(delta_ppm) DIV 2").as("tv")).collect().head.getLong(0)
-      assert(streamed.get(t(m)).contains(batchTv),
-        s"window 10:$m stream ${streamed.get(t(m))} != batch $batchTv")
-    }
-  }
-
-  test("flatMapGroupsWithState keeps running per-key totals across batches") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(String, Double)]
-    val out = Realtime.runningTotals(mem.toDF().toDF("k", "v"), "k", "v")
-    val q = out.writeStream.outputMode("update")
-      .format("memory").queryName("state_out").start()
-    mem.addData(("a", 1.0), ("a", 2.0), ("b", 10.0))
-    q.processAllAvailable()
-    mem.addData(("a", 4.0)) // state carries 3.0 forward
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("state_out").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    assert(rows.contains(("a", 3.0, 2L)), s"batch-1 total, got ${rows.toSeq}")
-    assert(rows.contains(("a", 7.0, 3L)), s"batch-2 cumulative total, got ${rows.toSeq}")
-    assert(rows.contains(("b", 10.0, 1L)))
   }
 
   test("checkpoint restart resumes without reprocessing (commitlog replay parity)") {
@@ -908,29 +600,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.contains("PartitionFilters: [isnotnull(p_date"),
       s"date filter must become a partition filter:\n$e")
     assert(filtered.count() == 2)
-  }
-
-  test("salted join equals plain join on skewed keys") {
-    import spark.implicits._
-    val skewed = (1 to 2000).map(i => (if (i % 10 == 0) 1L else i.toLong, i))
-      .toDF("k", "v")
-    val dim = (1L to 2000L).map(k => (k, s"d$k")).toDF("k", "name")
-    val plain = skewed.join(dim, Seq("k")).select("k", "v", "name").collect().toSet
-    val salted = operators.Skew.saltedJoin(skewed, dim, "k", salt = 8)
-      .select("k", "v", "name").collect().toSet
-    assert(salted == plain)
-    // left outer keeps unmatched skewed-side rows exactly once
-    val dimHalf = dim.filter($"k" <= 1000L)
-    val lo = operators.Skew.saltedJoin(skewed, dimHalf, "k", salt = 8, joinType = "left_outer")
-    assert(lo.count() == skewed.count())
-    // replicating the right side under right/full outer would duplicate its
-    // unmatched rows `salt` times — rejected up front
-    intercept[IllegalArgumentException] {
-      operators.Skew.saltedJoin(skewed, dim, "k", salt = 8, joinType = "right_outer")
-    }
-    intercept[IllegalArgumentException] {
-      operators.Skew.saltedJoin(skewed, dim, "k", salt = 8, joinType = "full")
-    }
   }
 
   test("funnel and retention over the hybrid view equal the all-batch answer") {
