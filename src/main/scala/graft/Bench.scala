@@ -1,48 +1,42 @@
 package graft
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-/** Driver-run benchmark: one JSON line with per-query wall seconds.
+/** Driver-run benchmark: one JSON line with per-query wall seconds. The
+  * timed action is `df.count()`; the headline is each query's minimum over
+  * the warm passes, and a cold section re-times the [[coldNames]] chain
+  * queries with their memoized builds dropped.
   *
-  * Methodology (round 17 — kill-proof): the timed action is unchanged
-  * (`df.count()`, min over warm passes per query, sorted name order;
-  * cold section re-pays memoized chain builds), but artifact DELIVERY is
-  * restructured. Rounds 15 AND 16 both produced `rc:124, parsed:null`
-  * driver artifacts — the engine numbers existed but were printed only
-  * after the final pass, so a wall-cap kill under co-tenant contention
-  * (this host has measured 4–14x contended slowdowns, SCALE.md) erased
-  * them. Two fixes:
+  * The schedule ([[Schedule]]) runs under the whole-wall budget
+  * `SPARK_GRAFT_BENCH_BUDGET_S` (seconds from `main` entry, default 900):
   *
-  *  1. INCREMENTAL EMISSION — after warmup and after EVERY timed pass
-  *     (warm and cold) the current artifact line is printed (marked
-  *     `"partial":"warmup"|"pass1"|...`) and BENCH_DETAIL.json is
-  *     rewritten. The driver parses the LAST complete JSON line in the
-  *     stdout tail, so a kill at any point after warmup still delivers a
-  *     parsed payload; the final line is unmarked.
-  *  2. WHOLE-WALL BUDGET — `SPARK_GRAFT_BENCH_BUDGET_S` (default 900 s)
-  *     now bounds the wall from `main` entry INCLUDING warmup (it used
-  *     to bound only the timed passes, leaving a 400 s unbudgeted warmup
-  *     floor). Warmup and pass STARTS are deadline-guarded, and (round
-  *     18) passes 2+ and every cold pass re-check the deadline BETWEEN
-  *     queries — a contended stall truncates the pass (the partial pass
-  *     still feeds the per-query min for the queries it completed) and
-  *     the budget is never overrun by more than one query. Pass 1 is
-  *     the ONE deliberately unguarded phase: it is the artifact's
-  *     backbone — a query missing from the final `queries` map reads as
-  *     dropped-from-bench downstream, which is strictly worse than a
-  *     late line — so once started it always runs to completion. If
-  *     warmup alone eats the budget the warmup-derived line is emitted
-  *     and the run exits 0.
+  *  1. The warmup runs each [[coldNames]] chain query once and
+  *     plan-touches every other query, starts no new query once half the
+  *     budget is spent, and records each chain's wall.
+  *  1. Warm passes run over all queries in name order until two are
+  *     complete: pass 1 always runs to completion, and pass 2 stops between
+  *     queries when the deadline is reached.
+  *  1. Cold passes use the budget that is left, at most two and each
+  *     truncatable between queries, and the artifact carries
+  *     `"degraded": true` whenever fewer than two warm passes completed.
   *
-  * The warmup itself is also ~3x cheaper: full runs only for the
-  * [[coldNames]] chain queries (their memoized builds are the one-time
-  * cost warm passes must not carry); every other query gets a PLAN-TOUCH
-  * — with AQE off, `groupBy().count()` (the exact shape the timed
-  * `df.count()` executes) is planned and its RDD lineage built, which
+  * Pass 1 runs unguarded because the artifact needs every query in it (a
+  * query missing from `queries` reads as dropped from the bench). The
+  * warmup cap leaves it half the budget, so the budget bounds everything
+  * except pass 1; every other phase overruns it by at most one query.
+  *
+  * After every phase the current artifact line is printed, marked
+  * `"partial":"warmup"|"pass1"|...`, and BENCH_DETAIL.json is rewritten:
+  * the driver parses the last complete JSON line of the stdout tail, so a
+  * kill after the warmup still leaves a result. The final line is unmarked.
+  *
+  * The plan-touch plans `groupBy().count()` (the shape the timed
+  * `df.count()` executes) with AQE off and builds its RDD lineage, which
   * Janino-compiles every whole-stage-codegen span and builds broadcast
-  * relations without submitting a result job. An actual partial RUN
-  * (limit(1)) would NOT be cheap here: every declared query carries a
-  * total ORDER BY, so limit(1) executes the whole plan.
+  * relations without submitting a result job. A partial run (limit(1))
+  * would not be cheaper: every query carries a total ORDER BY, so limit(1)
+  * executes the whole plan.
   */
 object Bench {
   /** The memoized-chain queries timed COLD (caches dropped before each):
@@ -80,6 +74,82 @@ object Bench {
     "q63_mix_sources")
     .filter(SparkEntry.queries.contains)
 
+  /** The whole-wall budget in seconds: `SPARK_GRAFT_BENCH_BUDGET_S` when
+    * set (it must be a positive number), else 900. */
+  def budgetSeconds(setting: Option[String]): Double = setting match {
+    case None => 900.0
+    case Some(s) => s.trim.toDoubleOption.filter(b => b > 0 && !b.isInfinite)
+      .getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_BUDGET_S must be a positive number of seconds, got '$s'"))
+  }
+
+  /** What a [[Schedule]] drives: the clock and the queries. `main` runs
+    * Spark through it; BenchSpec drives the schedule with fake walls. */
+  trait Engine {
+    /** Seconds since the run began. */
+    def elapsed: Double
+    /** Run one query's timed action; its wall in seconds, failed or not. */
+    def run(name: String): Double
+    /** Plan-touch each of `names` while `open()` holds; how many were touched. */
+    def touch(names: Seq[String], open: () => Boolean): Int
+    /** Drop every memoized chain, so the next run rebuilds what it uses. */
+    def dropChains(): Unit
+    /** Called after each phase: "warmup", "pass1", "pass2", "cold1", "cold2". */
+    def phaseDone(phase: String): Unit
+  }
+
+  /** The fixed schedule of Bench's scaladoc over `names` (already in name
+    * order), with `chains` the cold-timed chain queries. The state is public
+    * so that [[Engine.phaseDone]] can emit it after every phase. */
+  final class Schedule(val names: Seq[String], val chains: Seq[String],
+      budgetS: Double) {
+    var chainWarm = Map.empty[String, Double]
+    var warmupS = 0.0
+    var touched = 0
+    val warm = mutable.ArrayBuffer.empty[Map[String, Double]]
+    val cold = mutable.ArrayBuffer.empty[Map[String, Double]]
+
+    def degraded: Boolean = warm.count(_.size == names.size) < 2
+    def truncated: Int =
+      warm.count(_.size != names.size) + cold.count(_.size != chains.size)
+
+    /** Each query's minimum over the warm passes that hold it; before pass
+      * 1, the warmup's chain walls. */
+    def results: Seq[(String, Double)] =
+      if (warm.isEmpty) chainWarm.toSeq.sortBy(_._1)
+      else names.map(n => n -> warm.flatMap(_.get(n)).min)
+
+    def run(e: Engine): Unit = {
+      def before(limitS: Double): () => Boolean = () => e.elapsed < limitS
+      val halfway = before(budgetS / 2)
+      val open = before(budgetS)
+      // runs `qs` in order while `go()` holds before each query
+      def timed(qs: Seq[String], go: () => Boolean, dropFirst: Boolean = false) =
+        qs.iterator.takeWhile(_ => go()).map { n =>
+          if (dropFirst) e.dropChains()
+          n -> e.run(n)
+        }.toMap
+
+      val t0 = e.elapsed
+      chainWarm = timed(chains, halfway)
+      touched = e.touch(names.filterNot(chains.toSet), halfway)
+      warmupS = e.elapsed - t0
+      e.phaseDone("warmup")
+
+      warm += timed(names, () => true)
+      e.phaseDone("pass1")
+      if (open()) {
+        warm += timed(names, open)
+        e.phaseDone("pass2")
+      }
+
+      while (cold.size < 2 && open()) {
+        cold += timed(chains, open, dropFirst = true)
+        e.phaseDone(s"cold${cold.size}")
+      }
+    }
+  }
+
   /** Deny exactly one known-benign message on one logger, leaving every
     * other message at that logger visible (vs Configurator.setLevel,
     * which mutes the whole logger and would hide a NEW warning class). */
@@ -112,7 +182,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val tMain = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - tMain) / 1e9
+    def wallS: Double = (System.nanoTime() - tMain) / 1e9
+    val budgetS = budgetSeconds(sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Graft.session(appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
@@ -130,33 +201,19 @@ object Bench {
       "No Partition Defined")
     muteMessage("org.apache.spark.storage.BlockManager",
       "already exists on this machine")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // WHOLE-wall budget, default 900 s: the driver's cap is ~3600 s and
-    // this host has measured contended slowdowns of 4–14x, so the quiet
-    // wall must stay well under a quarter of the cap for the full
-    // schedule to survive contention — and when it doesn't, the deadline
-    // guards below degrade the schedule instead of overrunning.
-    val budgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(900.0)
-    def remaining: Double = budgetS - elapsed
+    val sched = new Schedule(SparkEntry.queries.keys.toSeq.sorted, coldNames, budgetS)
     // a query that THROWS must be visible, not a normal-looking elapsed
     // time: q163 crashed at sf0.1 for a round (ANSI long overflow) with
     // zero bench signal because the catch swallowed it
-    val failed = scala.collection.mutable.SortedSet.empty[String]
-    def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => failed += name }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val failed = mutable.SortedSet.empty[String]
     // fixed-work calibration probe: an in-memory aggregate whose cost is
-    // independent of sf and of the query set, timed at session start,
-    // mid-session and at session end. Same-code probe times disagreeing
-    // means ambient machine load moved DURING the run — round 13 lost its
-    // headline to exactly that, and the probe makes the artifact
-    // self-adjudicating instead of leaving the judge to diff per-query
-    // medians across rounds. ~1s of fixed work: long enough that
-    // scheduler jitter can't fake a >15% probe disagreement.
+    // independent of sf and of the query set, timed after the warmup and
+    // at session end. Same-code probe times disagreeing means ambient
+    // machine load moved DURING the run — round 13 lost its headline to
+    // exactly that, and the probe makes the artifact self-adjudicating
+    // instead of leaving the judge to diff per-query medians across
+    // rounds. ~1s of fixed work: long enough that scheduler jitter can't
+    // fake a >15% probe disagreement.
     val calibN = 4500000000L
     def calibrate(): Double = {
       val t0 = System.nanoTime()
@@ -170,22 +227,15 @@ object Bench {
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
+    val probes = mutable.ArrayBuffer.empty[Double]
+    val loads = mutable.ArrayBuffer.empty[Double]
 
     // ------------------------------------------------------------------
-    // Emission: all state the artifact is built from, mutated as phases
-    // complete; emit() serialises the CURRENT state. Called after warmup
-    // and after every pass so a kill at any later second still leaves a
+    // Emission: emit() serialises the schedule's CURRENT state. Called
+    // after every phase so a kill at any later second still leaves a
     // complete, parseable line in the stdout tail (and a fresh
     // BENCH_DETAIL.json on disk).
     // ------------------------------------------------------------------
-    val warmPasses = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    val passWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val coldPassList = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
-    val warmupWalls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var warmupS = 0.0
-    var touchedN = 0
-    val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def f2(v: Double): String =
@@ -196,8 +246,6 @@ object Bench {
       val ts = ps.map(_.values.sum)
       if (ts.isEmpty) 1.0 else ts.max / math.max(ts.min, 1e-9)
     }
-    def probeDisagree(a: Double, b: Double): Boolean =
-      math.max(a, b) / math.max(math.min(a, b), 1e-9) > 1.15
     val detailPath = "BENCH_DETAIL.json"
     def shortKey(n: String): String = n.indexOf('_') match {
       case -1 => n
@@ -206,53 +254,39 @@ object Bench {
     /** Build the artifact from current state; write the detail file and
       * print the stdout line. `partial=None` marks the final emission. */
     def emit(partial: Option[String]): Unit = {
-      val passes = warmPasses.toSeq
-      // before any timed pass the only per-query walls are the warmup's
-      // chain full-runs: a last-resort payload, clearly marked "warmup".
-      // Passes 2+ may be TRUNCATED by the mid-pass deadline guard, so the
-      // per-query min runs over the passes that contain the query; pass 1
-      // is complete by design, so every name has a value (a name missing
-      // from every pass breaks that invariant, and `min` throws).
-      val results: Seq[(String, Double)] =
-        if (passes.nonEmpty) names.map(n => n -> passes.flatMap(_.get(n)).min)
-        else warmupWalls.toSeq.sortBy(_._1)
-      val coldPasses = coldPassList.toSeq
-      val coldByName = coldPasses.map(_.toMap)
-      // cold passes are truncatable too: report the queries at least one
-      // cold pass completed (cold is supplementary — the headline is warm)
-      val cold = coldNames.flatMap { n =>
-        val vs = coldByName.flatMap(_.get(n))
-        if (vs.nonEmpty) Some(n -> vs.min) else None
+      val passes = sched.warm.toSeq
+      val results = sched.results
+      val coldPasses = sched.cold.toSeq
+      // cold passes are truncatable: report the queries at least one cold
+      // pass completed (cold is supplementary — the headline is warm)
+      def coldBy(f: Seq[Double] => Double) = coldNames.flatMap { n =>
+        val vs = coldPasses.flatMap(_.get(n))
+        if (vs.nonEmpty) Some(n -> f(vs)) else None
       }
-      val coldMax = coldNames.flatMap { n =>
-        val vs = coldByName.flatMap(_.get(n))
-        if (vs.nonEmpty) Some(n -> vs.max) else None
-      }
+      val cold = coldBy(_.min)
       val total = results.map(_._2).sum
       val coldTotal = cold.map(_._2).sum
       val passTotals = passes.map(_.values.sum).map(f3).mkString("[", ",", "]")
-      val coldPassTotals = coldPasses.map(_.map(_._2).sum).map(f3)
+      val coldPassTotals = coldPasses.map(_.values.sum).map(f3)
         .mkString("[", ",", "]")
       // warm-pass max/min ratio: >~1.3 means a contended run — read the
       // per-pass totals before believing any regression. Computed over
       // COMPLETE passes only: a truncated pass's smaller total is a
       // schedule artifact, not contention evidence.
-      val fullPasses = passes.filter(_.size == names.size)
+      val fullPasses = passes.filter(_.size == sched.names.size)
       val passSpread = f3(spreadOf(fullPasses))
       val calib = probes.map(f3).mkString("[", ",", "]")
       val loadsJ = loads.map(f2).mkString("[", ",", "]")
       val contended = spreadOf(fullPasses) > 1.15 ||
-        (probes.nonEmpty && probeDisagree(probes.max, probes.min))
+        (probes.nonEmpty && probes.max / math.max(probes.min, 1e-9) > 1.15)
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       // self-describing schedule: how many passes actually ran, against
       // what whole-wall budget, how the warmup was split (full chain runs
       // vs plan-touches) and the wall so far — a reduced run (contended
       // box) is distinguishable from a full one without archaeology
-      val truncated = passes.count(_.size != names.size) +
-        coldPasses.count(_.size != coldNames.size)
-      val sched = s"""{"budget_s":${f3(budgetS)},"warmup_s":${f3(warmupS)},"chain_warm":${warmupWalls.size},"touched":$touchedN,"warm_passes":${passes.size},"cold_passes":${coldPasses.size},"truncated_passes":$truncated,"wall_s":${f3(elapsed)}}"""
+      def schedJson(extra: String) = s"""{"budget_s":${f3(budgetS)},"warmup_s":${f3(sched.warmupS)},"chain_warm":${sched.chainWarm.size},"touched":${sched.touched},"warm_passes":${passes.size},"cold_passes":${coldPasses.size},"truncated_passes":${sched.truncated},"degraded":${sched.degraded},"wall_s":${f3(wallS)}$extra}"""
       val part = partial.map(p => s""","partial":"$p"""").getOrElse("")
-      val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(results, f3)},"cold":${jmap(cold, f3)},"cold_max":${jmap(coldMax, f3)},"pass_totals":$passTotals,"cold_pass_totals":$coldPassTotals,"pass_spread":$passSpread,"calibration_s":$calib,"load_avg":$loadsJ,"contended":$contended,"sched":$sched,"failed":$failedJson$part,"sf":"$sfDir"}"""
+      val detail = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(results, f3)},"cold":${jmap(cold, f3)},"cold_max":${jmap(coldBy(_.max), f3)},"pass_totals":$passTotals,"cold_pass_totals":$coldPassTotals,"pass_spread":$passSpread,"calibration_s":$calib,"load_avg":$loadsJ,"contended":$contended,"sched":${schedJson(s""","chain_warm_s":${jmap(sched.chainWarm.toSeq.sortBy(_._1), f3)}""")},"failed":$failedJson$part,"sf":"$sfDir"}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detail + "\n").getBytes("UTF-8"))
       catch { case e: java.io.IOException =>
@@ -265,10 +299,11 @@ object Bench {
       // line guaranteed to fit, degrading per-query keys
       // ("q75_interval_overlap" -> "q75") and, if even that overflows,
       // keeping only the slowest entries.
+      val sj = schedJson("")
       def line(qs: Seq[(String, Double)], omitted: Int): String = {
         val omit = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
         val fl = if (failed.isEmpty) "" else s""","failed":$failedJson"""
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(qs, f2)}$omit,"cold_total":${f3(coldTotal)},"pass_totals":$passTotals,"cold_pass_totals":$coldPassTotals,"pass_spread":$passSpread,"calibration_s":$calib,"load_avg":$loadsJ,"contended":$contended,"sched":$sched$fl$part,"detail":"$detailPath","sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(qs, f2)}$omit,"cold_total":${f3(coldTotal)},"pass_totals":$passTotals,"cold_pass_totals":$coldPassTotals,"pass_spread":$passSpread,"calibration_s":$calib,"load_avg":$loadsJ,"contended":$contended,"sched":$sj$fl$part,"detail":"$detailPath","sf":"$sfDir"}"""
       }
       val shortAll = results.map { case (k, v) => shortKey(k) -> v }
       val bySlow = shortAll.sortBy(-_._2)
@@ -280,165 +315,63 @@ object Bench {
       println(out)
     }
 
-    // ------------------------------------------------------------------
-    // Warmup. Full runs ONLY for the cold-chain queries (their memoized
-    // builds are what later passes must find warm); a plan-touch for the
-    // other ~240. The touch plans the exact count() shape the timed
-    // action executes and calls executedPlan.execute() with AQE off:
-    // that builds the RDD lineage — Janino-compiling every whole-stage-
-    // codegen span and building broadcast relations — but submits no
-    // result job (with AQE ON the same call would materialise every
-    // shuffle stage, i.e. run the query). Deadline-guarded per query so
-    // a contended box degrades to fewer warm queries, never to rc:124.
-    // ------------------------------------------------------------------
     calibrate() // untimed: JIT + codegen warmup of the probe itself
-    val warmupT0 = System.nanoTime()
-    val coldSet = coldNames.toSet
-    coldNames.foreach { n =>
-      if (remaining > 0.55 * budgetS) warmupWalls(n) = runOne(n)
-    }
-    // Touches are driver-side work (Catalyst + Janino, ~0.5 s/query
-    // single-threaded — 240 queries would cost ~2 min sequentially) that
-    // submits no result jobs, so they parallelise across a small pool;
-    // the AQE-off window covers the whole pool (every touch wants it
-    // off, and memoized-chain lookups key on THIS session, so a cloned
-    // per-thread session would miss the chains just built above and
-    // rebuild them). Each task re-checks the deadline so a contended box
-    // degrades to fewer warm queries, never to rc:124.
-    locally {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val touched = new java.util.concurrent.atomic.AtomicInteger(0)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      try {
-        val tasks = names.filterNot(coldSet).map { n =>
-          pool.submit(new Runnable {
-            def run(): Unit = if (remaining > 0.45 * budgetS) {
-              try SparkEntry.queries(n)(spark, sfDir)
-                .groupBy().count().queryExecution.executedPlan.execute()
-              catch { case NonFatal(e) =>
-                System.err.println(s"[bench] warmup touch of $n failed: " +
-                  e.toString.linesIterator.next()) }
-              touched.incrementAndGet()
-            }
-          })
+    sched.run(new Engine {
+      def elapsed: Double = wallS
+      def run(name: String): Double = {
+        val t0 = System.nanoTime()
+        try SparkEntry.queries(name)(spark, sfDir).count()
+        catch { case NonFatal(_) => failed += name }
+        (System.nanoTime() - t0) / 1e9
+      }
+      // Touches are driver-side work (Catalyst + Janino, ~0.5 s/query
+      // single-threaded — 240 queries would cost ~2 min sequentially) that
+      // submits no result jobs, so they parallelise across a small pool.
+      // The AQE-off window covers the whole pool: with AQE ON,
+      // executedPlan.execute() would materialise every shuffle stage, i.e.
+      // run the query. Memoized-chain lookups key on THIS session, so a
+      // cloned per-thread session would miss the chains the warmup just
+      // built and rebuild them.
+      def touch(qs: Seq[String], open: () => Boolean): Int = {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val touched = new java.util.concurrent.atomic.AtomicInteger(0)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+        try {
+          qs.map { n =>
+            pool.submit(new Runnable {
+              def run(): Unit = if (open()) {
+                try SparkEntry.queries(n)(spark, sfDir)
+                  .groupBy().count().queryExecution.executedPlan.execute()
+                catch { case NonFatal(e) =>
+                  System.err.println(s"[bench] warmup touch of $n failed: " +
+                    e.toString.linesIterator.next()) }
+                touched.incrementAndGet()
+              }
+            })
+          }.foreach(_.get())
+        } finally {
+          pool.shutdown()
+          spark.conf.set("spark.sql.adaptive.enabled", "true")
         }
-        tasks.foreach(_.get())
-      } finally {
-        pool.shutdown()
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        touched.get()
       }
-      touchedN = touched.get()
-    }
-    warmupS = (System.nanoTime() - warmupT0) / 1e9
-    // warmup-only failures are not timed-pass failures: a query that fails
-    // in every TIMED pass re-enters the set below; one that only failed
-    // during warmup (e.g. a racing fixture) must not be reported as failed
-    failed.clear()
-    loads += loadAvg()
-    probes += calibrate()
-    emit(Some("warmup"))
-
-    // ------------------------------------------------------------------
-    // Timed warm passes: always 1; a 2nd for min-of-N and the spread
-    // when it fits; a 3rd when it AND the planned cold section fit; an
-    // escalation pass when the spread or probes disagree (taken BEFORE
-    // the cold section, which drops the memoized chains — a pass taken
-    // after those drops re-pays the chain builds and poisons the spread
-    // it was meant to adjudicate).
-    // ------------------------------------------------------------------
-    def runPass(): Unit = {
-      val t0 = System.nanoTime()
-      // pass 1 always runs to completion (the artifact's backbone: a name
-      // missing from `queries` reads as dropped-from-bench downstream);
-      // passes 2+ re-check the whole-wall deadline between queries and
-      // truncate instead of overrunning (budget excess ≤ 1 query).
-      val truncatable = warmPasses.nonEmpty
-      val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      var cut = false
-      for (n <- names if !cut) {
-        if (truncatable && remaining <= 0) cut = true
-        else acc(n) = runOne(n)
-      }
-      warmPasses += acc.toMap
-      // a truncated pass must not feed the pass-wall estimate the
-      // schedule gates divide by
-      if (!cut) passWalls += (System.nanoTime() - t0) / 1e9
-      emit(Some(s"pass${warmPasses.size}"))
-    }
-    // pass-1 gate (ADVICE r17): the chain queries' cold walls are the
-    // same-run estimate of a full pass (measured ≈ 0.7–1.1× a full warm
-    // pass — the chains are the slowest queries and cold at that); the
-    // rest of warmupS is plan-touches, which measure no pass at all.
-    val pass1Est = warmupWalls.values.sum
-    if (remaining < pass1Est && warmupWalls.nonEmpty) {
-      // contention ate the whole budget during warmup: the warmup-derived
-      // line is the artifact — exit 0 cleanly rather than overrun
-      spark.stop()
-      emit(Some("warmup"))
-      return
-    }
-    runPass()
-    def avgWarm: Double = passWalls.sum / passWalls.size
-    // cold-pass estimate: the 32 cold queries re-pay their chain rebuilds
-    // ≈ 0.85x a steady warm pass (the committed BENCH_DETAIL ratio with
-    // headroom — actual cold passes run ~0.5x, so this over-reserves).
-    def coldEst: Double = 0.85 * avgWarm
-    // pass 2 is the most valuable remaining work (the headline is the
-    // warm min-of-N; a single-pass warm number is contention-hostage) so
-    // it reserves nothing for the cold section; pass 3 must leave room
-    // for the full planned cold section
-    // min-of-N and spread decisions count only COMPLETE passes (a
-    // truncated pass contributes per-query mins but is not a sample of
-    // the pass wall)
-    def fullWarm: Seq[Map[String, Double]] =
-      warmPasses.toSeq.filter(_.size == names.size)
-    if (remaining > avgWarm) runPass()
-    if (fullWarm.size >= 2 && remaining > avgWarm + 2 * coldEst)
-      runPass()
-    probes += calibrate()
-    if (fullWarm.size >= 2 &&
-        (spreadOf(fullWarm) > 1.15 ||
-         probeDisagree(probes.head, probes.last)) &&
-        remaining > avgWarm + 2 * coldEst)
-      runPass()
-
-    // ------------------------------------------------------------------
-    // Cold passes: min per query over up to two passes (a single cold
-    // sample is hostage to driver contention — r8 reported q84 cold at
-    // 13.4s where an isolated run measures 2.8s; the per-query max is
-    // kept in the detail file so a contended run is self-evident).
-    // ------------------------------------------------------------------
-    def coldPass(): Unit = {
-      // every cold pass re-checks the deadline between queries: cold is
-      // supplementary (the headline is warm), so truncating is always
-      // preferable to overrunning the whole-wall budget
-      val r = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      var cut = false
-      for (name <- coldNames if !cut) {
-        if (remaining <= 0) cut = true
-        else {
-          Memo.invalidate(spark, sfDir)
-          val q0 = System.nanoTime()
-          try SparkEntry.queries(name)(spark, sfDir).count()
-          catch { case _: Throwable => failed += name }
-          r += (name -> (System.nanoTime() - q0) / 1e9)
+      def dropChains(): Unit = Memo.invalidate(spark, sfDir)
+      def phaseDone(phase: String): Unit = {
+        if (phase == "warmup") {
+          // a query that failed only in the warmup (e.g. a racing fixture)
+          // is not a timed failure; one that fails in a timed pass
+          // re-enters the set there
+          failed.clear()
+          loads += loadAvg()
+          probes += calibrate()
         }
+        emit(Some(phase))
       }
-      coldPassList += r.toSeq
-      emit(Some(s"cold${coldPassList.size}"))
-    }
-    // 0.5x: the measured steady cold/warm pass ratio (r16 committed
-    // detail: 112.6/209.6) — coldEst's 0.85x padding is for RESERVING
-    // ahead of a warm pass, not for gating the cold attempt itself
-    if (remaining > 0.5 * avgWarm) coldPass()
-    val cold1S = coldPassList.lastOption.map(_.map(_._2).sum).getOrElse(0.0)
-    if (coldPassList.size == 1 && remaining > cold1S) coldPass()
+    })
 
-    // end-of-session probe: closes the ambient-load story over the WHOLE
-    // run (warmup + warm + escalation + cold). The contended flag is true
-    // if the warm passes disagreed or ANY probe pair disagreed — a reader
-    // never mistakes ambient load for a regression (nor a quiet rerun for
-    // an improvement).
+    // end-of-session probe: the contended flag is true if the warm passes
+    // disagreed or the two probes disagreed — a reader never mistakes
+    // ambient load for a regression (nor a quiet rerun for an improvement)
     probes += calibrate()
     loads += loadAvg()
     // stop Spark BEFORE the final emission so no shutdown logging can

@@ -66,9 +66,6 @@ object TimeCodec {
       (if (p.length > 2) p(2).toInt else 0)
   }
   def format(sec: Int): String = f"${sec / 3600}%02d:${sec / 60 % 60}%02d:${sec % 60}%02d"
-  /** Column helpers for the TIME convention. */
-  def toTimeString(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    format_string("%02d:%02d:%02d", c / 3600, c / 60 % 60, c % 60)
 }
 
 case class TableSpec(

@@ -907,11 +907,10 @@ object Similarity {
     * corpus: planes ≈ log2(n / targetBucketSize) ([[planesFor]] — e.g. a
     * 10⁹-vector corpus at c=64 needs ~24 planes, NOT a fixed 4, which
     * there would degenerate into an accidental near-all-pairs join).
-    * [[cosineNearDupsAuto]] derives it from the corpus count. Recall note:
-    * more planes lower per-bucket collision probability for true near-dups
-    * too (P[same bucket] = (1 − θ/π)^planes); when recall matters more
-    * than cost, run multiple independent plane families (bands) and union
-    * the candidates, as minhashLsh does for text. */
+    * Recall note: more planes lower per-bucket collision probability for
+    * true near-dups too (P[same bucket] = (1 − θ/π)^planes); when recall
+    * matters more than cost, run multiple independent plane families
+    * (bands) and union the candidates, as minhashLsh does for text. */
   def cosineNearDups(emb: DataFrame, planes: Int, threshold: Double): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
@@ -946,13 +945,6 @@ object Similarity {
       .filter($"cosine" >= threshold)
       .orderBy($"vec_a", $"vec_b")
   }
-
-  /** [[cosineNearDups]] with `planes` derived from the corpus size via
-    * [[planesFor]] — the call a user should make when they don't have a
-    * tuned plane count (defaults must not silently go quadratic at 10⁹). */
-  def cosineNearDupsAuto(emb: DataFrame, threshold: Double,
-      targetBucket: Long = 64L): DataFrame =
-    cosineNearDups(emb, planesFor(emb.count(), targetBucket), threshold)
 
   private def q40(s: SparkSession, d: String): DataFrame =
     cosineNearDups(Tables.embeddings(s, d), planes = 4, threshold = 0.4)

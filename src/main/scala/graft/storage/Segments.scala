@@ -296,7 +296,9 @@ object Segments {
 
   /** Stats compare as the column's native type via the `numeric` flag
     * (numeric → BigDecimal compare, else UTF-8 byte order — matching how
-    * the stats were stringified). */
+    * the stats were stringified). A numeric bound that is not a finite
+    * decimal (a double column's "NaN" or "Infinity") throws
+    * NumberFormatException; its callers then keep the file. */
   private def cmp(a: String, b: String, numeric: Boolean): Int =
     if (numeric) BigDecimal(a).compare(BigDecimal(b)) else utf8Cmp(a, b)
 
@@ -304,7 +306,9 @@ object Segments {
   private def inRange(fs: FileStats, colName: String, lo: Option[String],
       hi: Option[String], numeric: Boolean): Boolean = fs.stats.get(colName) match {
     case Some((Some(mn), Some(mx))) =>
-      lo.forall(l => cmp(mx, l, numeric) >= 0) && hi.forall(h => cmp(mn, h, numeric) <= 0)
+      try lo.forall(l => cmp(mx, l, numeric) >= 0) &&
+        hi.forall(h => cmp(mn, h, numeric) <= 0)
+      catch { case _: NumberFormatException => true }
     case _ => true // unindexed column or no stats (all-null) → can't prune
   }
 
@@ -354,7 +358,8 @@ object Segments {
       extends FilePred {
     def mayMatch(fs: FileStats): Boolean = fs.stats.get(colName) match {
       case Some((Some(mn), Some(mx))) =>
-        !(cmp(mn, mx, numeric) == 0 && cmp(mn, value, numeric) == 0)
+        try !(cmp(mn, mx, numeric) == 0 && cmp(mn, value, numeric) == 0)
+        catch { case _: NumberFormatException => true }
       case _ => true
     }
   }

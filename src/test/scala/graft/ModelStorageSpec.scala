@@ -550,6 +550,19 @@ class ModelStorageSpec extends AnyFunSuite {
     assert(low.length == 50 && keptAnd < 8, s"AND kept $keptAnd of 8")
   }
 
+  test("NaN and Infinity manifest bounds keep their files instead of throwing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-nan").toString + "/t"
+    val src = Seq((1L, 1.0), (2L, Double.NaN), (3L, 5.0), (4L, Double.PositiveInfinity))
+      .toDF("k", "v")
+    Segments.write(src, dir, sortCols = Seq("k"), indexedCols = Seq("v"),
+      numSegments = 4)
+    val read = spark.read.format("graft").load(dir)
+    Seq($"v" > 2.0, $"v" < 2.0, $"v" === 5.0, $"v" =!= 1.0).foreach { p =>
+      assert(read.filter(p).count() == src.filter(p).count(), s"filter $p")
+    }
+  }
+
   test("manifest string compares use UTF-8 byte order (UTF8String parity)") {
     // U+FFFD (3-byte UTF-8, high UTF-16 code unit) vs U+10400 (4-byte UTF-8,
     // surrogate pair): compareTo says FFFD > 10400, UTF-8 bytes say the
